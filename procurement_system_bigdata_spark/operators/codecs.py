@@ -1065,7 +1065,8 @@ class _BitReader:
     ~45% of baseline/lossless decode).  This reader buffers up to 6 bytes
     per refill and serves ``bits(n)`` with one shift+mask; bit-level
     semantics (including the exhausted-stream exception) are unchanged —
-    pinned by tools/probe_r11_codec_diff.py against the old outputs.
+    the decoded outputs were diffed against the old reader's, and
+    tests/test_round11_opt.py pins the reader against a per-bit reference.
     """
 
     def __init__(self, data: bytes):
@@ -1076,10 +1077,13 @@ class _BitReader:
 
     def _fill(self) -> None:
         """Pull up to 6 more bytes into the accumulator (no-op at end of
-        data; callers decide whether running dry is an error)."""
+        data; callers decide whether running dry is an error).  ``bit()``
+        leaves its consumed bits in ``acc``; masking them out here keeps
+        ``acc`` to ``nbits + 48`` bits without adding work to ``bit()``."""
         take = self.data[self.pos : self.pos + 6]
         if take:
-            self.acc = (self.acc << (8 * len(take))) | int.from_bytes(take, "big")
+            live = self.acc & ((1 << self.nbits) - 1)
+            self.acc = (live << (8 * len(take))) | int.from_bytes(take, "big")
             self.nbits += 8 * len(take)
             self.pos += len(take)
 

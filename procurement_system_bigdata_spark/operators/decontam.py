@@ -184,8 +184,8 @@ BLOOM_TARGET_FP = 0.01
 def bloom_m_for(n_items: int, target_fp: float = BLOOM_TARGET_FP, k_hashes: int = BLOOM_K) -> int:
     """Smallest power-of-two m with (1 - e^{-k n / m})^k <= target_fp.
 
-    Inverts the standard Bloom FP formula (validated against measurement
-    to 4 decimals by tools/probe_hash_truth_sf1.py): m >= -k n /
+    Inverts the standard Bloom FP formula (validated against a measured
+    false-positive rate to 4 decimals at sf1): m >= -k n /
     ln(1 - p^(1/k)).  Power-of-two so the modulus stays cheap and sizes
     are stable across small n drifts."""
     import math

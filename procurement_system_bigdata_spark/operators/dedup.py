@@ -400,8 +400,8 @@ def _confirm_jaccard(
     of an EMPTY literal array costs O(1) per row — shuffling one of the
     real token arrays also works but pays a Fisher-Yates pass over the
     set per pair, measurable on large-vocabulary corpora; rand()-based
-    guards do NOT work (the optimizer strips them — plan probe in
-    tools/probe_r11_confirm_fusion.py shows 3 intersect copies).
+    guards do NOT work (the optimizer strips them — a plan probe showed 3
+    intersect copies).
 
     Values are bit-identical to the naive shape: the same integer
     ``n_common`` / set sizes feed the same double division.

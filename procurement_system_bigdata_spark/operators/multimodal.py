@@ -1695,8 +1695,8 @@ def video_neardup_pairs(
     the pair-listing CONTRACT (every confirmed clip pair, quadratic in
     duplicate-class size by definition) is unchanged, but the candidate
     join input shrinks from clips x P*4 band rows to distinct-signatures
-    x P*4 on exact-dup-heavy corpora (measured in
-    tools/probe_star_edge_scaling.py).  Output is identical to banding
+    x P*4 on exact-dup-heavy corpora (measured: 1,000 clips -> 99
+    distinct signatures, 10.1x).  Output is identical to banding
     over clips because both candidacy (band-key equality) and the
     MAX-Hamming verify are functions of the signatures alone: same-
     signature pairs share every band and measure 0 <= max_hamming, and a

@@ -759,8 +759,8 @@ def budget_cap_sample(
     therefore run through :func:`ranking.with_keyed_running_total`: below
     the row bound it IS that single-shuffle window (unchanged plan and
     bit-identical output at oracle scale); above it the keyed two-phase
-    prefix sum range-partitions each source across many tasks
-    (tools/probe_keyed_prefix.py pins >2 tasks for a 2-source corpus).
+    prefix sum range-partitions each source across many tasks (measured:
+    >2 tasks for a 2-source corpus of 80k docs).
     The per-source totals ride a vocabulary-sized broadcast.  Exact BIGINT
     token math; the budget compare is integer cross-multiplication (no
     doubles) — bit-identical in the DuckDB mirror.

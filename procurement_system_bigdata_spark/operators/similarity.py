@@ -111,7 +111,7 @@ def _spread_emb(emb: DataFrame) -> DataFrame:
 
 def cosine_pandas_udf(query_vec: list):
     """Arrow-batched vectorized cosine against a fixed query vector — the
-    measured fast path for vector math (tools/bench_udf.py: ~3x faster than
+    measured fast path for vector math (~3x faster than
     the zip_with/aggregate builtins at 64 dims, because Catalyst higher-order
     functions are interpreted per element while numpy fuses the batch).
 

@@ -24,12 +24,11 @@ class QuerySpec:
     oracle: str | None
     description: str
     ops: tuple[str, ...] = field(default_factory=tuple)
-    bench: bool = False  # included in bench.py headline set
     # Non-empty -> the DUCKDB MIRROR (not the engine) is infeasible above
     # ~sf0.01 for the stated reason; big-SF sweeps (DRIVER_SIM_SF_DIR at
-    # sf0.1) skip these instead of hanging on the oracle side.  The engine
-    # path itself stays scale-tested by bench/probes.  Machine-readable so
-    # sweep tooling never re-derives the list from DESIGN.md prose.
+    # sf0.1) skip these instead of hanging on the oracle side.
+    # Machine-readable so sweep tooling never re-derives the list from
+    # DESIGN.md prose.
     oracle_scale_bound: str = ""
 
 
@@ -50,7 +49,6 @@ _register(
         description="Q1: demand aggregation per (sku, warehouse) "
         "(reference pipeline.py:408-426)",
         ops=("J1", "J2", "A1", "A2", "A3", "A4", "P1", "P2", "O1", "S7"),
-        bench=True,
     )
 )
 _register(
@@ -61,7 +59,6 @@ _register(
         description="Q2: net demand w/ safety-stock densification + inventory "
         "offsets (reference pipeline.py:495-537)",
         ops=("C1", "J3", "J4", "J5", "J6", "P4", "P5", "P7", "O2", "S9"),
-        bench=True,
     )
 )
 _register(
@@ -73,7 +70,6 @@ _register(
         "ranking and PO-id synthesis (reference pipeline.py:616-687)",
         ops=("C2", "W1", "W2", "P3", "P5", "P6", "P7", "P8", "P9", "P10",
              "P11", "P12", "P13", "P14", "J7", "J8", "O3"),
-        bench=True,
     )
 )
 _register(
@@ -104,7 +100,6 @@ _register(
         description="Tumbling-window hourly aggregation (batch anchor for the "
         "Structured Streaming path)",
         ops=("A1", "A2", "A3"),
-        bench=True,
     )
 )
 _register(
@@ -144,7 +139,6 @@ _register(
         oracle=analytics.Q_PRICING_SUMMARY_SQL,
         description="TPC-H Q1-shaped multi-aggregate GROUP BY",
         ops=("A1", "A2", "A3", "P7"),
-        bench=True,
     )
 )
 _register(
@@ -360,7 +354,6 @@ _register(
         oracle=llmdata.Q_DEDUP_FINGERPRINT_SQL,
         description="Word-set fingerprint dedup (order/multiplicity-insensitive)",
         ops=("EXT-dedup",),
-        bench=True,
     )
 )
 _register(
@@ -369,9 +362,9 @@ _register(
         fn=llmdata.q_dedup_minhash_lsh,
         oracle=llmdata.Q_DEDUP_MINHASH_LSH_SQL,
         description="MinHash+LSH near-dup pairs, Jaccard-confirmed",
-        # not a bench headline: the synthetic corpus has a 31-word vocabulary
-        # so the TRUE answer is near-quadratic (~900k pairs at sf0.1) and the
-        # timing measures output volume, not engine speed
+        # the synthetic corpus has a 31-word vocabulary so the TRUE answer is
+        # near-quadratic (~900k pairs at sf0.1): timing it on this corpus measures
+        # output volume, not engine speed
         ops=("EXT-dedup",),
     )
 )
@@ -401,8 +394,6 @@ _register(
         description="SimHash near-dup pairs via banded LSH (no cross join) "
         "+ exact bit_count(xor) hamming verify",
         ops=("EXT-dedup",),
-        bench=True,  # banding-path regression guard (hamming<=3 output is
-        # small even on the toy vocabulary, so timing measures the engine)
     )
 )
 _register(
@@ -412,7 +403,6 @@ _register(
         oracle=llmdata.Q_EMBEDDING_TOPK_SQL,
         description="Brute-force cosine top-k neighbours (exact ANN baseline)",
         ops=("EXT-similarity",),
-        bench=True,
     )
 )
 _register(
@@ -561,11 +551,10 @@ _register(
         "labels; kept_consistent_ok/split_match_ok bind the real composed "
         "output — runs at every SF",
         ops=("EXT-pipeline",),
-        # not a bench headline for the same reason as dedup_minhash_lsh:
         # on the 31-word-vocabulary corpus the near-dup graph is dense
-        # (output-volume-bound at sf0.1); bench.py times the SAME
-        # composition on the realistic-vocabulary derived corpus instead
-        # (curation_prod_realvocab)
+        # (output-volume-bound at sf0.1, as for dedup_minhash_lsh); the
+        # perfbench corpus_curation workload times the same composition on
+        # a realistic-vocabulary corpus instead
     )
 )
 _register(
@@ -695,7 +684,6 @@ _register(
         description="Q6-shape selective scan + global agg — pushdown/codegen "
         "probe (every predicate reaches PushedFilters)",
         ops=("P8", "P10", "P11", "EXT-dss"),
-        bench=True,
     )
 )
 _register(
@@ -2037,7 +2025,7 @@ _DRIVER_SNAPSHOT = [
     # rolling_active_users, daily_anomalies, edit_distance_pairs,
     # containment_pairs, basket_pairs, scd2_customer_segments,
     # robust_outliers) lead the next rotation.  The 11-entry core above
-    # and the 13 bench/scale pins below never rotate.  Rotated out (all
+    # and the 13 scale pins below never rotate.  Rotated out (all
     # externally covered in r09): media_decode_interlaced,
     # audio_dedup_clusters, video_fingerprint, image_dedup_clusters,
     # embedding_quantize, lang_id .. multi_grain_rollup.
@@ -2068,7 +2056,7 @@ _DRIVER_SNAPSHOT = [
     "dedup_ngram_jaccard_capped",
     "semantic_decontamination",
     "temperature_mixture",
-    # --- filler slots (13): permanent pins on the bench headliners and
+    # --- filler slots (13): permanent pins on the hot query shapes and
     # the scale-critical dedup/curation paths, so the external gate keeps
     # exercising the code most likely to regress.
     "dedup_fingerprint",

@@ -53,21 +53,6 @@ def test_supplier_orders_plan(spark):
     assert full["python_udfs"] == 0
 
 
-def test_grouping_sets_variant_matches_two_scan(spark):
-    """demand_inventory_offers (single-scan GROUPING SETS alternative, kept
-    for scan-dominated deployments) must produce exactly the relations the
-    default two-scan derivation produces."""
-    from procurement_system_bigdata_spark.queries import procurement as P
-
-    li, part, supp, nat = P._facts_dims(spark, SF_DIR)
-    ao2, inv2 = P.combined_demand_inventory(li, part, supp, nat)
-    rs2 = P.ranked_suppliers_stage(li, part, supp)
-    ao1, inv1, offers1 = P.demand_inventory_offers(li, part, supp, nat)
-    rs1 = P.ranked_suppliers_from_offers(offers1, part, supp)
-    for a, b in ((ao1, ao2), (inv1, inv2), (rs1, rs2)):
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_top_k_uses_take_ordered(spark):
     stats = plan_stats(REGISTRY["top_parts_by_revenue"].fn(spark, SF_DIR))
     assert stats["take_ordered"] >= 1, "LIMIT should compile to TakeOrderedAndProject"

@@ -15,8 +15,7 @@ Distribution notes (sampled from /root/testdata/sf0.1):
 - documents keep the driver's TOY 31-WORD vocabulary and 10..100-word
   lengths: raw-corpus near-dup queries stay output-volume-bound by
   construction (documented in DESIGN.md round 5); engine-bound timings
-  come from bench's realvocab derived corpus, which derives from these
-  docs unchanged.
+  need the realistic vocabulary (``--vocab=real``).
 - embeddings: random unit 64-d float32 (max pairwise cosine ~0.5 like the
   driver's), labels U(0..9), vec_id dense.
 
@@ -38,8 +37,7 @@ import pyarrow.parquet as pq
 
 # --vocab=real (round-8 judge ask #1): generate documents on a REALISTIC
 # vocabulary instead of the toy 31-word one.  Token j of doc d is
-# "t" + md5("{d//2}:{j}")[:12] — the exact scheme bench.py's
-# _realvocab_docs derives at query time — so adjacent doc pairs (2g, 2g+1)
+# "t" + md5("{d//2}:{j}")[:12], so adjacent doc pairs (2g, 2g+1)
 # overlap (Jaccard = min/max word count) and all other pairs are disjoint:
 # the TRUE near-dup answer is LINEAR in the corpus, where the toy vocab
 # yields ~90M true pairs at 50k docs (DESIGN.md "sf1 extended sweep") and
@@ -254,7 +252,7 @@ texts, langs, srcs = [], [], []
 for d in range(N_DOCS):
     n = int(rng.integers(10, 101))
     if VOCAB_MODE == "real":
-        # same token scheme as bench.py _realvocab_docs (1-based j); rng
+        # the token scheme described at VOCAB_MODE (1-based j); rng
         # stream consumption matches the toy branch so langs/srcs/lengths
         # are identical across vocab modes
         words = [
