@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 from datetime import date
 
@@ -107,7 +106,6 @@ def main(argv: list[str] | None = None) -> dict:
             sinks.write_single_csv(df, directory, f"{name}.csv")
             sinks.write_single_json(df, directory, f"{name}.json")
 
-    summary_dir = f"{args.out_root}/output/pipeline_summary"
     # the reference's summary task always runs (all_done), but a run with
     # exhausted-retry stages must not be RECORDED as a clean success — the
     # status names the degradation and the failed stages travel in the log
@@ -115,9 +113,7 @@ def main(argv: list[str] | None = None) -> dict:
     status = "success" if not failed else "degraded:" + ",".join(failed)
     summary = dict(out["summary"], failed_stages=failed)
     sinks.write_task_log(args.out_root, "daily_pipeline", run_date, status, summary)
-    os.makedirs(summary_dir, exist_ok=True)
-    with open(f"{summary_dir}/summary_{day}.json", "w") as f:
-        json.dump(summary, f, indent=2, default=str)
+    sinks.write_json_file(f"{args.out_root}/output/pipeline_summary/summary_{day}.json", summary)
     out["release"]()
     print(json.dumps(summary, default=str))
     return summary

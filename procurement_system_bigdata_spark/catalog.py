@@ -40,15 +40,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one named table from an sf directory.
 
     ``events.ts`` is stored as parquet TIMESTAMP(NANOS) which Spark's
-    vectorized reader rejects; it is read via the runtime-settable
-    ``nanosAsLong`` legacy conf and normalized to micro-precision
-    TimestampType with integer division (floor), matching how DuckDB
-    truncates nanos -> micros on read.
+    vectorized reader rejects; the session's ``nanosAsLong`` legacy conf
+    (session.RUNTIME_CONFS) reads it as a bigint, normalized here to
+    micro-precision TimestampType with integer division (floor), matching
+    how DuckDB truncates nanos -> micros on read.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         from pyspark.sql import functions as F
 
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -10,9 +10,16 @@ re-derives its CTEs from raw, SURVEY §2.7) or cached for reuse.
 Query semantics are 1:1 with the three federated Trino queries:
 - aggregate_orders   -> pipeline.py:408-426 (Q1)
 - net_demand         -> pipeline.py:495-537 (Q2)
-- supplier_orders    -> pipeline.py:616-687 (Q3 + Python enrichment)
+- supplier_orders    -> pipeline.py:616-681 (Q3 + the enrichment's arithmetic)
+- number_purchase_orders -> pipeline.py:682-687 (PO ids, order_date, status)
 with the documented determinism fixes (SURVEY §2.5): ROW_NUMBER tie-breaks
 on supplier_id / (sku_id, warehouse_id).
+
+These stages are the engine's only Q1-Q3: the registry's procurement
+queries (queries/procurement.py) map the TPC-H stand-in tables onto the
+same reference-shaped frames and call them.  Stages return unsorted frames
+and never branch on their caller; sorting, renames and casts belong to the
+output edge (``run_pipeline`` here, the ``q_*`` functions there).
 """
 
 from __future__ import annotations
@@ -37,6 +44,12 @@ logger = logging.getLogger(__name__)
 # which Airflow would re-run from the top of the task.
 STAGE_RETRIES = 2
 STAGE_RETRY_DELAY_SEC = 300.0
+
+# The product and warehouse attributes every Q1-Q3 output row carries.
+DIMS = (
+    "sku_id", "sku_code", "product_name", "category",
+    "warehouse_id", "warehouse_code", "warehouse_name", "city",
+)
 
 
 def retry_stage(
@@ -69,34 +82,37 @@ def retry_stage(
     raise AssertionError("unreachable")
 
 
+def attach_dims(keyed: DataFrame, products: DataFrame, warehouses: DataFrame) -> DataFrame:
+    """Broadcast-attach the product and warehouse attributes to a frame
+    keyed by (sku_id, warehouse_id).  Inner joins, like the reference's
+    orders ⋈ products ⋈ warehouses: a key with no master row drops out."""
+    p = products.select(
+        "sku_id", "sku_code", F.col("name").alias("product_name"), "category"
+    )
+    w = warehouses.select(
+        "warehouse_id", "warehouse_code", F.col("name").alias("warehouse_name"), "city"
+    )
+    return keyed.join(F.broadcast(p), "sku_id").join(F.broadcast(w), "warehouse_id")
+
+
 def aggregate_orders(
-    orders: DataFrame, products: DataFrame, warehouses: DataFrame, full: bool = True
+    orders: DataFrame, products: DataFrame, warehouses: DataFrame
 ) -> DataFrame:
     """Q1 (reference pipeline.py:408-426): orders ⋈ products ⋈ warehouses,
-    8-key GROUP BY, SUM/COUNT/MAX.  Dims are tiny -> broadcast; at scale the
-    fact side never shuffles for the joins, only for the aggregation."""
-    joined = (
-        orders.join(F.broadcast(products), orders.sku_id == products.sku_id)
-        .join(F.broadcast(warehouses), orders.warehouse_id == warehouses.warehouse_id)
+    8-key GROUP BY, SUM/COUNT/MAX.  Aggregated on the two id keys, then the
+    dim attributes are broadcast-attached: the same rows as the 8-key
+    GROUP BY, because every attribute is keyed by its id, but the shuffle
+    carries two longs instead of six strings and the dim joins run at
+    aggregate cardinality.  Consumers that read only ``total_quantity``
+    get the other aggregates pruned by the optimizer."""
+    agg = orders.groupBy("sku_id", "warehouse_id").agg(
+        F.sum("quantity").alias("total_quantity"),
+        F.count(F.lit(1)).alias("order_count"),
+        F.max("order_date").alias("order_date"),  # string max on ISO dates (A4)
     )
-    keys = [
-        orders.sku_id.alias("sku_id"),
-        products.sku_code.alias("sku_code"),
-        products.name.alias("product_name"),
-        products.category.alias("category"),
-        orders.warehouse_id.alias("warehouse_id"),
-        warehouses.warehouse_code.alias("warehouse_code"),
-        warehouses.name.alias("warehouse_name"),
-        warehouses.city.alias("city"),
-    ]
-    aggs = [F.sum(orders.quantity).alias("total_quantity")]
-    if full:
-        aggs += [
-            F.count(F.lit(1)).alias("order_count"),
-            F.max(orders.order_date).alias("order_date"),  # string max on ISO dates (A4)
-        ]
-    out = joined.groupBy(*keys).agg(*aggs)
-    return out.orderBy(F.desc("total_quantity")) if full else out
+    return attach_dims(agg, products, warehouses).select(
+        *DIMS, "total_quantity", "order_count", "order_date"
+    )
 
 
 def safety_stock_combined(
@@ -133,42 +149,28 @@ def inventory_for_date(snapshots: DataFrame, run_date: date) -> DataFrame:
     )
 
 
-def net_demand(
-    agg_orders: DataFrame,
-    ss_combined: DataFrame,
-    inventory: DataFrame,
-    run_date: date,
-    full: bool = True,
-) -> DataFrame:
-    """Q2 final select (reference pipeline.py:521-537) + the Python-appended
-    calculation_date column (P13, pipeline.py:544-545, dd-MM-yyyy)."""
+def net_demand(demand: DataFrame, ss_combined: DataFrame) -> DataFrame:
+    """Q2 final select (reference pipeline.py:521-537).  ``demand`` is the
+    Q1 aggregate already carrying the day's ``available_qty`` /
+    ``reserved_qty`` (NULL where no snapshot row matched); the safety-stock
+    grid is left-joined on the id keys."""
     ss = ss_combined.withColumnRenamed("safety_stock_qty", "ss_qty")
-    joined = (
-        agg_orders.join(F.broadcast(ss), ["sku_id", "warehouse_id"], "left")
-        .join(inventory, ["sku_code", "warehouse_code"], "left")
-    )
+    joined = demand.join(ss, ["sku_id", "warehouse_id"], "left")
     avail = F.coalesce(F.col("available_qty"), F.lit(0))
     resv = F.coalesce(F.col("reserved_qty"), F.lit(0))
-    net = F.greatest(
-        F.lit(0).cast("long"),
-        (F.col("total_quantity") + F.coalesce(F.col("ss_qty"), F.lit(0)) - (avail - resv)).cast(
-            "long"
-        ),
-    )
-    dims = ["sku_id", "sku_code", "product_name", "category", "warehouse_id",
-            "warehouse_code", "warehouse_name", "city"]
-    if not full:
-        return joined.select(*dims, net.alias("net_demand"))
+    ss_qty = F.coalesce(F.col("ss_qty"), F.lit(0))
     return joined.select(
-        *dims,
+        *DIMS,
         F.col("total_quantity").alias("aggregated_orders"),
-        F.coalesce(F.col("ss_qty"), F.lit(0)).cast("long").alias("safety_stock"),
+        ss_qty.cast("long").alias("safety_stock"),
         avail.cast("long").alias("available_stock"),
         resv.cast("long").alias("reserved_stock"),
         (avail - resv).cast("long").alias("effective_stock"),
-        net.alias("net_demand"),
-        F.lit(run_date.strftime("%d-%m-%Y")).alias("calculation_date"),
-    ).orderBy(F.desc("net_demand"))
+        F.greatest(
+            F.lit(0).cast("long"),
+            (F.col("total_quantity") + ss_qty - (avail - resv)).cast("long"),
+        ).alias("net_demand"),
+    )
 
 
 def ranked_suppliers(supplier_products: DataFrame, suppliers: DataFrame) -> DataFrame:
@@ -191,10 +193,10 @@ def ranked_suppliers(supplier_products: DataFrame, suppliers: DataFrame) -> Data
 def supplier_orders(
     nd: DataFrame, ranked: DataFrame, run_date: date
 ) -> DataFrame:
-    """Q3 final select + Python enrichment (reference pipeline.py:663-687):
-    cheapest supplier (rank=1), pack-rounded order quantity with MOQ floor,
-    cost, delivery date, then PO ids minted in total_cost-DESC order with
-    deterministic tiebreak, order_date and status='PENDING'."""
+    """Q3 final select + the Python enrichment's arithmetic (reference
+    pipeline.py:663-681): cheapest supplier (rank=1), pack-rounded order
+    quantity with MOQ floor, cost and delivery date.  PO ids come from
+    ``number_purchase_orders``."""
     rs = ranked.filter(F.col("price_rank") == 1).select(
         "sku_id", "supplier_id", "supplier_code", "supplier_name",
         "pack_size", "min_order_qty", "unit_price", "currency", "lead_time_days",
@@ -209,9 +211,8 @@ def supplier_orders(
         F.ceil(F.col("net_demand").cast("double") / F.col("pack_size")).cast("double")
         * F.col("pack_size"),
     )
-    enriched = joined.select(
-        "sku_id", "sku_code", "product_name", "category",
-        "warehouse_id", "warehouse_code", "warehouse_name", "city",
+    return joined.select(
+        *DIMS,
         "supplier_id", "supplier_code", "supplier_name",
         "net_demand", "pack_size", "min_order_qty", "unit_price", "currency",
         "lead_time_days",
@@ -219,19 +220,27 @@ def supplier_orders(
         (order_qty * F.col("unit_price").cast("double")).alias("total_cost"),
         F.date_add(F.lit(run_date), F.col("lead_time_days")).alias("expected_delivery_date"),
     )
-    # Global PO numbering via the two-phase range-sort operator — identical
-    # sequence to ROW_NUMBER (the key is a deterministic total order since
-    # (sku_id, warehouse_id) is unique per row) without the single-partition
-    # wall; same swap as queries/procurement.q_supplier_orders.
+
+
+def number_purchase_orders(
+    enriched: DataFrame, run_date: date, n_rows: int | None = None
+) -> DataFrame:
+    """The enrichment's tail (reference pipeline.py:682-687): PO ids minted
+    in total_cost-DESC order, order_date and status='PENDING'.
+
+    Global numbering via the two-phase range-sort operator — identical
+    sequence to ROW_NUMBER (the key is a deterministic total order since
+    (sku_id, warehouse_id) is unique per row) without the single-partition
+    wall.  ``n_rows`` is an optional upper bound on the row count; it lets
+    the numbering skip its count job (see ``with_global_sequence``)."""
     po_keys = [F.desc("total_cost"), F.asc("sku_id"), F.asc("warehouse_id")]
     compact = run_date.strftime("%Y%m%d")
     return (
-        with_global_sequence(enriched, po_keys, seq_col="_seq")
+        with_global_sequence(enriched, po_keys, seq_col="_seq", n_rows=n_rows)
         .withColumn("order_id", F.format_string("PO-%s-%05d", F.lit(compact), F.col("_seq")))
         .withColumn("order_date", F.lit(run_date.isoformat()))
         .withColumn("status", F.lit("PENDING"))
         .drop("_seq")
-        .orderBy(F.desc("total_cost"), "sku_id", "warehouse_id")
     )
 
 
@@ -245,7 +254,6 @@ def run_pipeline(
     ss_by_warehouse: DataFrame,
     snapshots: DataFrame,
     run_date: date,
-    reuse_stages: bool = True,
     stage_retries: int = STAGE_RETRIES,
     retry_delay_sec: float = 0.0,
     retry_sleep: Callable[[float], None] = time.sleep,
@@ -263,27 +271,36 @@ def run_pipeline(
     0-defaults and ``failed_stages`` names what failed.
 
     The reference re-derives the shared CTEs inside every query; here each
-    stage df is built once and — with ``reuse_stages`` — persisted, so the
-    summary's six actions and the downstream supplier-orders derivation hit
-    the materialized stage instead of re-running the whole lineage (the
-    reference pays this recompute three times per day, SURVEY §2.7).  At
-    scale the persisted frames are dim-product bounded (|sku|×|warehouse|
-    for net_demand, purchase-order count for supplier_orders), never
-    fact-sized, so MEMORY_AND_DISK stage caches stay small even at 100 TB
-    of raw orders.  ``release()`` in the returned dict unpersists them.
-    Callers wanting byte-layout outputs use sources.sinks on the frames.
+    output is built once and persisted, so the summary's actions and the
+    downstream stages hit the materialized frame instead of re-running the
+    whole lineage (the reference pays this recompute three times per day,
+    SURVEY §2.7).  At scale the persisted frames are dim-product bounded
+    (|sku|×|warehouse| for net_demand, purchase-order count for
+    supplier_orders), never fact-sized, so MEMORY_AND_DISK stage caches stay
+    small even at 100 TB of raw orders.  ``release()`` in the returned dict
+    unpersists them.  Outputs are sorted here, at the edge, with the
+    (sku_id, warehouse_id) tiebreak that makes the written row order
+    independent of the plan.  Callers wanting byte-layout outputs use
+    sources.sinks on the frames.
     """
-    agg_full = aggregate_orders(orders, products, warehouses, full=True)
-    agg_slim = aggregate_orders(orders, products, warehouses, full=False)
+    agg = (
+        aggregate_orders(orders, products, warehouses)
+        .orderBy(F.desc("total_quantity"), "sku_id", "warehouse_id")
+        .persist()
+    )
+    # J6: the day's snapshot measures join back on the string codes
+    demand = agg.join(
+        inventory_for_date(snapshots, run_date), ["sku_code", "warehouse_code"], "left"
+    )
     ssc = safety_stock_combined(safety_stock, warehouses, ss_by_warehouse)
-    inv = inventory_for_date(snapshots, run_date)
-    nd_full = net_demand(agg_slim, ssc, inv, run_date, full=True)
-    persisted: list[DataFrame] = []
-    if reuse_stages:
-        # agg_full feeds one count + the returned frame; nd_full feeds three
-        # summary actions + supplier_orders; so feeds two actions + return.
-        agg_full, nd_full = agg_full.persist(), nd_full.persist()
-        persisted += [agg_full, nd_full]
+    nd = (
+        net_demand(demand, F.broadcast(ssc))
+        # P13 (pipeline.py:544-545): the Python-appended dd-MM-yyyy column
+        .withColumn("calculation_date", F.lit(run_date.strftime("%d-%m-%Y")))
+        .orderBy(F.desc("net_demand"), "sku_id", "warehouse_id")
+        .persist()
+    )
+    persisted: list[DataFrame] = [agg, nd]
     rs = ranked_suppliers(supplier_products, suppliers)
     failed_stages: list[str] = []
     # generate_supplier_orders is the one stage whose BUILD already runs jobs
@@ -291,18 +308,19 @@ def run_pipeline(
     # itself runs under the task retry policy, like reference task 7.
     try:
         so = retry_stage(
-            lambda: supplier_orders(nd_full, rs, run_date),
+            lambda: (
+                number_purchase_orders(supplier_orders(nd, rs, run_date), run_date)
+                .orderBy(F.desc("total_cost"), "sku_id", "warehouse_id")
+            ),
             stage="generate_supplier_orders",
             retries=stage_retries,
             delay_sec=retry_delay_sec,
             sleep=retry_sleep,
-        )
+        ).persist()
+        persisted.append(so)
     except Exception:  # noqa: BLE001 — downstream summary is all_done
         so = None
         failed_stages.append("generate_supplier_orders")
-    if reuse_stages and so is not None:
-        so = so.persist()
-        persisted.append(so)
 
     # D2 + D4: each summary action runs under the reference's retry policy
     # (retries=2); the summary itself is trigger_rule=all_done — a metric
@@ -310,10 +328,10 @@ def run_pipeline(
     # aborting the run, and the failure is reported in failed_stages.
     metric_stages: list[tuple[str, Callable[[], object], object]] = [
         ("orders_count", lambda: orders.count(), 0),
-        ("aggregated_count", lambda: agg_full.count(), 0),
-        ("net_demand_count", lambda: nd_full.count(), 0),
-        ("total_net_demand", lambda: nd_full.agg(F.sum("net_demand")).first()[0] or 0, 0),
-        ("items_with_demand", lambda: nd_full.filter(F.col("net_demand") > 0).count(), 0),
+        ("aggregated_count", lambda: agg.count(), 0),
+        ("net_demand_count", lambda: nd.count(), 0),
+        ("total_net_demand", lambda: nd.agg(F.sum("net_demand")).first()[0] or 0, 0),
+        ("items_with_demand", lambda: nd.filter(F.col("net_demand") > 0).count(), 0),
         ("supplier_orders_count", lambda: so.count(), 0),
         ("total_cost", lambda: float(so.agg(F.sum("total_cost")).first()[0] or 0.0), 0.0),
     ]
@@ -340,8 +358,8 @@ def run_pipeline(
             df.unpersist()
 
     return {
-        "aggregated_orders": agg_full,
-        "net_demand": nd_full,
+        "aggregated_orders": agg,
+        "net_demand": nd,
         "supplier_orders": so,
         "summary": summary,
         "failed_stages": failed_stages,

@@ -1,9 +1,12 @@
 """Core procurement-parity queries over the driver's TPC-H-ish testdata.
 
-These re-express the reference's three federated Trino queries (reference
-dags/pipeline.py: Q1 aggregate_orders :408-426, Q2 net_demand :495-537,
-Q3 supplier_orders :616-675) on the driver's testdata tables, with the role
-mapping from FIXTURES.md §"Mapping onto the driver's existing testdata":
+The reference's three federated Trino queries (reference dags/pipeline.py:
+Q1 aggregate_orders :408-426, Q2 net_demand :495-537, Q3 supplier_orders
+:616-675) run through the daily pipeline's own stages
+(operators/pipeline.py).  This module is the adapter: it maps the testdata
+tables onto reference-shaped frames, calls those stages, and renames or
+casts at the edge to this registry's column contract.  The role mapping
+follows FIXTURES.md §"Mapping onto the driver's existing testdata":
 
 - ``lineitem``                 -> order-line facts (quantity, dates, prices)
 - ``part``                     -> products (sku); ``sku_code`` synthesized as
@@ -16,27 +19,31 @@ mapping from FIXTURES.md §"Mapping onto the driver's existing testdata":
                                   init-scripts/postgres/init.sql:58-71 have no
                                   testdata counterpart, so the derivation IS
                                   the fixture; identical in the DuckDB oracle)
+- supplier offers              -> derived from lineitem (see _ranked_suppliers)
 - inventory snapshots          -> lineitem shipped on/after SNAPSHOT_SPLIT
                                   (date-filtered scan == reference's
                                   Cassandra clustering-key read, pipeline.py
                                   :516-519); demand = lineitem before it
 
-Every aggregate / computed column is aliased identically in the Spark plan
-and the oracle SQL (driver hash-compares by sorted column name).  Numeric
-discipline: integer quantities are summed as BIGINT (order-independent);
-double expressions use identical expression trees in both engines so results
-are bit-identical; window orderings always carry a deterministic tiebreaker
-(SURVEY §2.5 determinism hazard).
+Reference columns with no testdata counterpart (``city``,
+``supplier_code``, ``currency``) travel as NULL and are dropped at the
+edge.  Every aggregate / computed column is aliased identically in the
+Spark plan and the oracle SQL (driver hash-compares by sorted column name).
+Numeric discipline: integer quantities are summed as BIGINT
+(order-independent); double expressions use identical expression trees in
+both engines so results are bit-identical; orderings always carry a
+deterministic tiebreaker (SURVEY §2.5 determinism hazard).
 """
 
 from __future__ import annotations
 
+from datetime import date
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..catalog import load_table
-from ..operators.ranking import with_global_sequence
+from ..catalog import load_tables
+from ..operators import pipeline as pl
 
 # Deterministic date split: demand = shipped before, inventory = on/after.
 # (lineitem shipdates span 1995-01-02 .. 2001-11-04 in the testdata.)
@@ -45,84 +52,49 @@ SNAPSHOT_SPLIT = "2000-01-01"
 # reference's per-run execution_date (pipeline.py:640,670).
 RUN_DATE = "2001-12-01"
 RUN_DATE_COMPACT = "20011201"
+_RUN_DATE = date.fromisoformat(RUN_DATE)
 
 
 # ---------------------------------------------------------------------------
-# Stage functions (the reference's CTEs, reference pipeline.py:496-520,
-# :617-662).  Each is a pure DataFrame -> DataFrame function so stages
-# compose both ways: recompute for parity, .cache() for reuse (SURVEY §2.7).
+# Reference-shaped frames over the testdata tables
 # ---------------------------------------------------------------------------
 
 
 def _facts_dims(spark: SparkSession, sf_dir: str):
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    supp = load_table(spark, sf_dir, "supplier")
-    nat = load_table(spark, sf_dir, "nation")
-    return li, part, supp, nat
+    return load_tables(spark, sf_dir, "lineitem", "part", "supplier", "nation")
 
 
-def _dim_attrs(part: DataFrame, nat: DataFrame):
-    """The dim attribute projections attached AFTER aggregation.
-
-    Aggregating on the narrow int keys (l_partkey, s_nationkey) and joining
-    the string attributes onto the (dim-product-bounded) aggregate is the
-    Spark-first shape: the shuffle carries two longs instead of five strings,
-    and the dim joins move from fact-cardinality to aggregate-cardinality.
-    Results are identical because every string column is functionally
-    dependent on its id (sku_code is synthesized 1:1 from the part row).
-    """
-    pdim = part.select(
+def _products_warehouses(part: DataFrame, nat: DataFrame):
+    """``products`` and ``warehouses`` master frames: part is the product,
+    the nation plays the warehouse (code and name are both n_name)."""
+    products = part.select(
         F.col("p_partkey").cast("long").alias("sku_id"),
         F.concat_ws("#", F.col("p_name"), F.col("p_partkey")).alias("sku_code"),
-        F.col("p_name").alias("product_name"),
+        F.col("p_name").alias("name"),
         F.col("p_brand").alias("category"),
     )
-    ndim = nat.select(
+    warehouses = nat.select(
         F.col("n_nationkey").cast("long").alias("warehouse_id"),
         F.col("n_name").alias("warehouse_code"),
-        F.col("n_name").alias("warehouse_name"),
+        F.col("n_name").alias("name"),
+        F.lit(None).cast("string").alias("city"),
     )
-    return pdim, ndim
+    return products, warehouses
 
 
-def aggregated_orders_stage(
-    li: DataFrame, part: DataFrame, supp: DataFrame, nat: DataFrame, full: bool
-) -> DataFrame:
-    """Reference Q1 CTE ``aggregated_orders`` (pipeline.py:408-426).
-
-    Operators J1 J2 A1-A4 P1 P2, restructured Spark-first: the fact scan
-    joins only the 2-column supplier->nation mapping (broadcast), aggregates
-    on narrow int keys (one shuffle of two longs + measures), then broadcast-
-    joins the dim attribute strings onto the aggregate.  Equivalent to the
-    reference's 8-key GROUP BY because all attributes are functionally
-    dependent on the ids; verified hash-identical against the oracle, which
-    keeps the reference's original wide-key shape.
-    ``full=False`` is the re-computed CTE shape used inside Q2/Q3
-    (pipeline.py:496-505).
-    """
-    demand = li.filter(F.col("l_shipdate") < F.lit(SNAPSHOT_SPLIT).cast("timestamp"))
+def _order_lines(li: DataFrame, supp: DataFrame) -> DataFrame:
+    """Every lineitem as an order line: placed at the supplier's nation
+    through the 2-column supplier->nation map (broadcast), so the fact scan
+    never joins the wide dims.  ``is_demand`` marks the lines shipped
+    before SNAPSHOT_SPLIT, the day's ``orders``; the rest is inventory."""
     smap = supp.select("s_suppkey", "s_nationkey")
-    joined = demand.join(F.broadcast(smap), demand.l_suppkey == smap.s_suppkey)
-    aggs = [F.sum(F.col("l_quantity").cast("long")).alias("total_quantity")]
-    if full:
-        aggs += [
-            F.count(F.lit(1)).alias("order_count"),
-            F.max(F.col("l_shipdate").cast("date")).alias("last_order_date"),
-        ]
-    agg = joined.groupBy(
+    return li.join(F.broadcast(smap), li.l_suppkey == smap.s_suppkey).select(
         F.col("l_partkey").cast("long").alias("sku_id"),
         F.col("s_nationkey").cast("long").alias("warehouse_id"),
-    ).agg(*aggs)
-    pdim, ndim = _dim_attrs(part, nat)
-    cols = [
-        "sku_id", "sku_code", "product_name", "category",
-        "warehouse_id", "warehouse_code", "warehouse_name", "total_quantity",
-    ] + (["order_count", "last_order_date"] if full else [])
-    return (
-        agg.join(F.broadcast(pdim), "sku_id")
-        .join(F.broadcast(ndim), "warehouse_id")
-        .select(*cols)
+        F.col("l_quantity").cast("long").alias("quantity"),
+        F.col("l_shipdate").cast("date").alias("order_date"),
+        "l_returnflag",
+        (F.col("l_shipdate") < F.lit(SNAPSHOT_SPLIT).cast("timestamp")).alias("is_demand"),
     )
 
 
@@ -148,14 +120,8 @@ AGGREGATED_ORDERS_CTE_SQL = f"""
 
 
 def safety_stock_stage(part: DataFrame, nat: DataFrame) -> DataFrame:
-    """Reference Q2 CTE ``safety_stock_combined`` (pipeline.py:506-515).
-
-    Global per-SKU safety stock densified to every (sku, warehouse) via a
-    CROSS JOIN, then overridden per-warehouse via LEFT JOIN + 3-arg COALESCE
-    (operators J3 J4 P4).  Preserves the reference quirk that the FROM anchor
-    is the global table: override-only SKUs would be dropped (SURVEY §7).
-
-    The safety-stock fixtures are derived deterministically:
+    """Reference Q2 CTE ``safety_stock_combined`` (pipeline.py:506-515) via
+    the shared stage, over the derived safety-stock fixtures:
       global:   safety_stock_qty = p_size * 10           (one row per part)
       override: rows where (p_partkey + n_nationkey) % 5 = 0,
                 qty = p_size * 5 + n_nationkey
@@ -164,7 +130,6 @@ def safety_stock_stage(part: DataFrame, nat: DataFrame) -> DataFrame:
         F.col("p_partkey").cast("long").alias("sku_id"),
         (F.col("p_size") * 10).cast("long").alias("safety_stock_qty"),
     )
-    wh = nat.select(F.col("n_nationkey").cast("long").alias("warehouse_id"))
     ssw = (
         part.crossJoin(nat)
         .filter((F.col("p_partkey") + F.col("n_nationkey")) % 5 == 0)
@@ -174,23 +139,8 @@ def safety_stock_stage(part: DataFrame, nat: DataFrame) -> DataFrame:
             (F.col("p_size") * 5 + F.col("n_nationkey")).cast("long").alias("safety_stock_qty"),
         )
     )
-    dense = ss.crossJoin(F.broadcast(wh))
-    return (
-        dense.alias("ss")
-        .join(
-            F.broadcast(ssw).alias("ssw"),
-            (F.col("ss.sku_id") == F.col("ssw.sku_id"))
-            & (F.col("ss.warehouse_id") == F.col("ssw.warehouse_id")),
-            "left",
-        )
-        .select(
-            F.coalesce(F.col("ssw.sku_id"), F.col("ss.sku_id")).alias("sku_id"),
-            F.coalesce(F.col("ssw.warehouse_id"), F.col("ss.warehouse_id")).alias("warehouse_id"),
-            F.coalesce(
-                F.col("ssw.safety_stock_qty"), F.col("ss.safety_stock_qty"), F.lit(0)
-            ).alias("safety_stock_qty"),
-        )
-    )
+    wh = nat.select(F.col("n_nationkey").cast("long").alias("warehouse_id"))
+    return pl.safety_stock_combined(ss, wh, ssw)
 
 
 SAFETY_STOCK_CTE_SQL = """
@@ -217,7 +167,7 @@ SAFETY_STOCK_CTE_SQL = """
 # Reference Q2 CTE ``inventory_data`` (pipeline.py:516-519), oracle side
 # only: snapshot measures keyed by string codes, joined back on (sku_code,
 # warehouse_code) (J6).  The Spark plan reads the same measures off the
-# shared aggregate row instead (see net_demand_fused).
+# shared aggregate row instead (see _combined_agg).
 INVENTORY_CTE_SQL = f"""
     SELECT
         l.p_name || '#' || CAST(l.p_partkey AS VARCHAR) AS sku_code,
@@ -236,6 +186,71 @@ INVENTORY_CTE_SQL = f"""
 """
 
 
+def _combined_agg(li: DataFrame, supp: DataFrame) -> DataFrame:
+    """Demand-side and snapshot-side measures per (sku_id, warehouse_id)
+    from ONE lineitem scan — how the stand-in supplies inventory.
+
+    The reference (and the oracle) aggregates demand and inventory
+    separately, then LEFT JOINs them back on (sku_code, warehouse_code)
+    (J6).  Both derive 1:1 from this conditional aggregate — the codes are
+    injective in the id keys — so the rows with demand carry exactly the
+    measures the rejoin would attach (0 where it would COALESCE a miss).
+    That drops the second fact scan and the code-key shuffle pair."""
+    is_demand, qty = F.col("is_demand"), F.col("quantity")
+    returned = ~is_demand & (F.col("l_returnflag") == "R")
+    return (
+        _order_lines(li, supp)
+        .groupBy("sku_id", "warehouse_id")
+        .agg(
+            F.sum(F.when(is_demand, qty).otherwise(F.lit(0))).alias("total_quantity"),
+            F.count(F.when(is_demand, F.lit(1))).alias("_demand_cnt"),
+            F.sum(F.when(~is_demand, qty).otherwise(F.lit(0))).alias("available_qty"),
+            F.sum(F.when(returned, qty).otherwise(F.lit(0))).alias("reserved_qty"),
+        )
+    )
+
+
+def _net_demand(li: DataFrame, part: DataFrame, supp: DataFrame, nat: DataFrame) -> DataFrame:
+    """The shared net_demand stage fed from the fused aggregate: one fact
+    scan, broadcast dim attaches, and one aggregate⋈aggregate left join
+    against the safety-stock grid (a shuffle join by design: both sides
+    are |sku|×|warehouse|-bounded, too big to broadcast at 100 TB; AQE
+    downgrades it to broadcast when small)."""
+    products, warehouses = _products_warehouses(part, nat)
+    demand = _combined_agg(li, supp).filter(F.col("_demand_cnt") > 0)
+    return pl.net_demand(
+        pl.attach_dims(demand, products, warehouses), safety_stock_stage(part, nat)
+    )
+
+
+def _ranked_suppliers(li: DataFrame, part: DataFrame, supp: DataFrame) -> DataFrame:
+    """Reference Q3 CTE ``ranked_suppliers`` (pipeline.py:654-662) via the
+    shared stage.  Offers are derived from lineitem: unit_price = min
+    observed extendedprice/quantity per (supplier, part), pack_size =
+    p_size, min_order_qty = 2×p_size, lead_time_days = suppkey % 10 + 1;
+    the active-supplier predicate (P10, pipeline.py:661) maps to
+    s_acctbal > 0."""
+    offers = li.groupBy(
+        F.col("l_suppkey").cast("long").alias("supplier_id"),
+        F.col("l_partkey").cast("long").alias("sku_id"),
+    ).agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_price"))
+    supplier_products = offers.join(F.broadcast(part), offers.sku_id == part.p_partkey).select(
+        "supplier_id", "sku_id", "unit_price",
+        F.col("p_size").cast("int").alias("pack_size"),
+        (F.col("p_size") * 2).cast("long").alias("min_order_qty"),
+        ((F.col("supplier_id") % 10) + 1).cast("int").alias("lead_time_days"),
+        F.lit(None).cast("string").alias("currency"),
+        F.lit(True).alias("is_active"),
+    )
+    suppliers = supp.select(
+        F.col("s_suppkey").cast("long").alias("supplier_id"),
+        F.lit(None).cast("string").alias("supplier_code"),
+        F.col("s_name").alias("name"),
+        (F.col("s_acctbal") > 0).alias("is_active"),
+    )
+    return pl.ranked_suppliers(supplier_products, suppliers)
+
+
 # ---------------------------------------------------------------------------
 # Driver-facing queries
 # ---------------------------------------------------------------------------
@@ -244,8 +259,14 @@ INVENTORY_CTE_SQL = f"""
 def q_aggregate_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1: aggregate demand per (sku, warehouse) — reference pipeline.py:408-426."""
     li, part, supp, nat = _facts_dims(spark, sf_dir)
-    return aggregated_orders_stage(li, part, supp, nat, full=True).orderBy(
-        F.desc("total_quantity"), "sku_id", "warehouse_id"
+    products, warehouses = _products_warehouses(part, nat)
+    return (
+        pl.aggregate_orders(
+            _order_lines(li, supp).filter(F.col("is_demand")), products, warehouses
+        )
+        .drop("city")
+        .withColumnRenamed("order_date", "last_order_date")
+        .orderBy(F.desc("total_quantity"), "sku_id", "warehouse_id")
     )
 
 
@@ -273,100 +294,15 @@ Q_AGGREGATE_ORDERS_SQL = f"""
 """
 
 
-def _combined_agg(li: DataFrame, supp: DataFrame) -> DataFrame:
-    """The shared conditional (sku_id, warehouse_id) aggregate: demand-side
-    and snapshot-side measures from ONE lineitem scan."""
-    split = F.lit(SNAPSHOT_SPLIT).cast("timestamp")
-    smap = supp.select("s_suppkey", "s_nationkey")
-    is_demand = F.col("l_shipdate") < split
-    qty = F.col("l_quantity").cast("long")
-    return (
-        li.join(F.broadcast(smap), li.l_suppkey == smap.s_suppkey)
-        .groupBy(
-            F.col("l_partkey").cast("long").alias("sku_id"),
-            F.col("s_nationkey").cast("long").alias("warehouse_id"),
-        )
-        .agg(
-            F.sum(F.when(is_demand, qty).otherwise(F.lit(0))).alias("_demand_qty"),
-            F.count(F.when(is_demand, F.lit(1))).alias("_demand_cnt"),
-            F.sum(F.when(~is_demand, qty).otherwise(F.lit(0))).alias("_avail"),
-            F.sum(
-                F.when(~is_demand & (F.col("l_returnflag") == "R"), qty).otherwise(
-                    F.lit(0)
-                )
-            ).alias("_resv"),
-        )
-    )
-
-
-def net_demand_fused(
-    li: DataFrame, part: DataFrame, supp: DataFrame, nat: DataFrame, full: bool
-) -> DataFrame:
-    """Net demand from ONE fact scan and ONE left join — the headline-query
-    derivation.
-
-    The reference's CTE shape (and the oracle's) aggregates the demand and
-    inventory relations separately, then LEFT JOINs them back on
-    (sku_code, warehouse_code) (J6).  But both relations derive 1:1 from the
-    SAME (sku_id, warehouse_id) conditional aggregate — sku_code and
-    warehouse_code are injective functions of the id keys — so the rejoin is
-    algebraically redundant: filtering the combined aggregate to demand rows
-    and reading the snapshot measures off the same row produces the
-    identical relation (COALESCE-on-miss == the conditional sums' 0
-    defaults; membership: inventory-only rows are dropped by the left join
-    anyway).  This removes the J6 code-key shuffle+sort pair AND the
-    second fact scan — the plan is one scan, broadcast dim attaches, and a
-    single aggregate⋈aggregate left join against the safety-stock grid
-    (shuffle join by design: both sides are |sku|x|warehouse|-bounded, too
-    big to broadcast at 100 TB; AQE downgrades to broadcast when small).
-    Oracle-hash-identical to the staged derivation (CORRECTNESS net_demand /
-    supplier_orders); J5/J6 operator parity lives on in the reference-shaped
-    pipeline (operators/pipeline.py).
-    """
-    demand = _combined_agg(li, supp).filter(F.col("_demand_cnt") > 0)
-    pdim, ndim = _dim_attrs(part, nat)
-    ssc = safety_stock_stage(part, nat).withColumnRenamed(
-        "safety_stock_qty", "ss_qty"
-    )
-    joined = (
-        demand.join(F.broadcast(pdim), "sku_id")
-        .join(F.broadcast(ndim), "warehouse_id")
-        .join(ssc, ["sku_id", "warehouse_id"], "left")
-    )
-    avail = F.col("_avail")
-    resv = F.col("_resv")
-    net = F.greatest(
-        F.lit(0).cast("long"),
-        (
-            F.col("_demand_qty")
-            + F.coalesce(F.col("ss_qty"), F.lit(0))
-            - (avail - resv)
-        ).cast("long"),
-    )
-    dims = [
-        "sku_id", "sku_code", "product_name", "category",
-        "warehouse_id", "warehouse_code", "warehouse_name",
-    ]
-    if full:
-        return joined.select(
-            *dims,
-            F.col("_demand_qty").alias("aggregated_orders"),
-            F.coalesce(F.col("ss_qty"), F.lit(0)).cast("long").alias("safety_stock"),
-            avail.cast("long").alias("available_stock"),
-            resv.cast("long").alias("reserved_stock"),
-            (avail - resv).cast("long").alias("effective_stock"),
-            net.alias("net_demand"),
-        )
-    return joined.select(*dims, net.alias("net_demand"))
-
-
 def q_net_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2: net demand with safety-stock densification + inventory offsets —
     reference pipeline.py:495-537 (CTEs C1, joins J3-J6, COALESCE/GREATEST).
-    Runs the fused single-scan derivation (see net_demand_fused)."""
+    Inventory comes off the fused single-scan aggregate (see _combined_agg)."""
     li, part, supp, nat = _facts_dims(spark, sf_dir)
-    return net_demand_fused(li, part, supp, nat, full=True).orderBy(
-        F.desc("net_demand"), "sku_id", "warehouse_id"
+    return (
+        _net_demand(li, part, supp, nat)
+        .drop("city")
+        .orderBy(F.desc("net_demand"), "sku_id", "warehouse_id")
     )
 
 
@@ -394,45 +330,6 @@ Q_NET_DEMAND_SQL = f"""
         ON ao.sku_code = inv.sku_code AND ao.warehouse_code = inv.warehouse_code
     ORDER BY net_demand DESC, ao.sku_id, ao.warehouse_id
 """
-
-
-def ranked_suppliers_stage(
-    li: DataFrame, part: DataFrame, supp: DataFrame
-) -> DataFrame:
-    """Reference Q3 CTE ``ranked_suppliers`` (pipeline.py:654-662).
-
-    Supplier offers are derived from lineitem: unit_price = min observed
-    extendedprice/quantity per (supplier, part); pack_size / min_order_qty /
-    lead_time_days derived deterministically.  Active-supplier predicate
-    (P10, pipeline.py:661) maps to s_acctbal > 0.  ROW_NUMBER ranks cheapest
-    per part with the deterministic supplier_id tiebreak (W1 + SURVEY §2.5).
-    """
-    offers = (
-        li.groupBy(
-            F.col("l_suppkey").cast("long").alias("supplier_id"),
-            F.col("l_partkey").cast("long").alias("sku_id"),
-        )
-        .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_price"))
-    )
-    dims = part.select(
-        F.col("p_partkey").cast("long").alias("sku_id"),
-        F.col("p_size").cast("int").alias("pack_size"),
-        (F.col("p_size") * 2).cast("long").alias("min_order_qty"),
-    )
-    sdim = supp.filter(F.col("s_acctbal") > 0).select(
-        F.col("s_suppkey").cast("long").alias("supplier_id"),
-        F.col("s_name").alias("supplier_name"),
-        ((F.col("s_suppkey") % 10) + 1).cast("int").alias("lead_time_days"),
-    )
-    rank_w = Window.partitionBy("sku_id").orderBy(
-        F.asc("unit_price"), F.asc("supplier_id")
-    )
-    return (
-        offers.join(F.broadcast(sdim), "supplier_id")
-        .join(F.broadcast(dims), "sku_id")
-        .withColumn("price_rank", F.row_number().over(rank_w))
-    )
-
 
 RANKED_SUPPLIERS_CTE_SQL = """
     SELECT
@@ -462,8 +359,9 @@ def q_supplier_orders(
     Cheapest active supplier per SKU (W1 + P12 rank=1 filter), order quantity
     rounded up to pack multiples with a min-order floor (P5 P6 P7), delivery
     date via DATE_ADD (P9), and the Python post-enrichment (PO ids minted in
-    total_cost-DESC order, order_date, status — pipeline.py:682-687) folded
-    into the plan as a window + format_string (W2 + P14).
+    total_cost-DESC order, order_date, status — pipeline.py:682-687).  The
+    stage's DOUBLE order_quantity (the reference's Trino CEILING quirk) is
+    cast to BIGINT here, and order_date to DATE.
 
     PO-count hint: output rows are one per (sku, warehouse) pair with
     demand, so |part| x |nation| bounds them from above.  Both counts are
@@ -472,14 +370,28 @@ def q_supplier_orders(
     the bound says single-task (round-6 shave: 3.68 -> 3.12 s at sf0.1,
     alternating solo medians); past ~1M possible pairs the bound diverts
     to the two-phase path, which is where it would belong anyway.
+
+    ``ordered=False`` is the PRODUCTION sink dial (round-7, judge ask #8):
+    the sink-edge orderBy exists ONLY for single-file/collect parity and
+    re-range-sorts rows the two-phase numbering already ordered — at sf1
+    it is ~40% of the whole query (medians 11.5 s -> 19.7 s).  A
+    production pipeline writes the numbered output range-partitioned
+    (file k holds PO sequence range k), whose concatenation is globally
+    ordered; every row already carries its order_id either way.
     """
     _, part, _, nat = _facts_dims(spark, sf_dir)
     n_upper = part.count() * nat.count()
-    return _supplier_orders_po_tail(
-        supplier_orders_enriched(spark, sf_dir),
-        n_rows_hint=n_upper,
-        ordered=ordered,
+    out = (
+        pl.number_purchase_orders(
+            supplier_orders_enriched(spark, sf_dir), _RUN_DATE, n_rows=n_upper
+        )
+        .drop("city", "supplier_code", "currency")
+        .withColumn("order_quantity", F.col("order_quantity").cast("long"))
+        .withColumn("order_date", F.col("order_date").cast("date"))
     )
+    if ordered:
+        out = out.orderBy(F.desc("total_cost"), "sku_id", "warehouse_id")
+    return out
 
 
 def supplier_orders_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -489,72 +401,9 @@ def supplier_orders_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused net-demand aggregate and the supplier-offer aggregate.
     """
     li, part, supp, nat = _facts_dims(spark, sf_dir)
-    nd = net_demand_fused(li, part, supp, nat, full=False)
-    rs = ranked_suppliers_stage(li, part, supp).filter(F.col("price_rank") == 1)
-
-    joined = nd.filter(F.col("net_demand") > 0).join(rs, "sku_id")
-    order_qty = F.greatest(
-        F.col("min_order_qty"),
-        (F.ceil(F.col("net_demand").cast("double") / F.col("pack_size")) * F.col("pack_size")).cast(
-            "long"
-        ),
+    return pl.supplier_orders(
+        _net_demand(li, part, supp, nat), _ranked_suppliers(li, part, supp), _RUN_DATE
     )
-    enriched = joined.select(
-        "sku_id",
-        "sku_code",
-        "product_name",
-        "category",
-        "warehouse_id",
-        "warehouse_code",
-        "warehouse_name",
-        "supplier_id",
-        "supplier_name",
-        "net_demand",
-        "pack_size",
-        "min_order_qty",
-        "unit_price",
-        "lead_time_days",
-        order_qty.alias("order_quantity"),
-        (order_qty * F.col("unit_price")).alias("total_cost"),
-        F.date_add(F.lit(RUN_DATE).cast("date"), F.col("lead_time_days")).alias(
-            "expected_delivery_date"
-        ),
-    )
-    return enriched
-
-
-def _supplier_orders_po_tail(
-    enriched: DataFrame, n_rows_hint: int | None = None, ordered: bool = True
-) -> DataFrame:
-    # PO ids need ROW_NUMBER over a global order (W2).  A bare
-    # Window.orderBy funnels every row through ONE partition — the wall at
-    # scale — so the numbering comes from the two-phase range-sort operator
-    # instead (identical sequence: the key is a deterministic total order
-    # since (sku_id, warehouse_id) is unique per row).  Measured at sf0.1
-    # local[32]: 1.7s vs 3.1s for the single-partition window.
-    #
-    # ``ordered=False`` is the PRODUCTION sink dial (round-7, judge ask #8):
-    # the sink-edge orderBy exists ONLY for single-file/collect parity and
-    # re-range-sorts rows the two-phase numbering already ordered — at sf1
-    # it is ~40% of the whole query (medians 11.5 s -> 19.7 s).  A
-    # production pipeline writes the numbered output range-partitioned
-    # (file k holds PO sequence range k), whose concatenation is globally
-    # ordered; every row already carries its order_id either way.
-    po_keys = [F.desc("total_cost"), F.asc("sku_id"), F.asc("warehouse_id")]
-    out = (
-        with_global_sequence(
-            enriched, po_keys, seq_col="po_seq", n_rows=n_rows_hint
-        )
-        .withColumn(
-            "order_id", F.format_string("PO-%s-%05d", F.lit(RUN_DATE_COMPACT), F.col("po_seq"))
-        )
-        .withColumn("order_date", F.lit(RUN_DATE).cast("date"))
-        .withColumn("status", F.lit("PENDING"))
-        .drop("po_seq")
-    )
-    if ordered:
-        out = out.orderBy(F.desc("total_cost"), "sku_id", "warehouse_id")
-    return out
 
 
 Q_SUPPLIER_ORDERS_SQL = f"""

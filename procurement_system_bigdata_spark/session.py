@@ -18,9 +18,12 @@ plans survive a 1000-executor / 100 TB deployment:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+logger = logging.getLogger(__name__)
 
 # Runtime-settable SQL confs applied both at build time and to externally
 # provided sessions (the correctness driver owns its own SparkSession).
@@ -44,6 +47,10 @@ RUNTIME_CONFS: dict[str, str] = {
     # far below Janino method-size trouble (codegen falls back safely
     # regardless).
     "spark.sql.codegen.maxFields": "200",
+    # events.ts is parquet TIMESTAMP(NANOS), which the reader rejects; read
+    # it as a bigint that catalog.load_table normalizes to a timestamp.  Set
+    # once here: a per-read set would race between clients sharing a session.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 
@@ -56,8 +63,8 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
-            pass  # non-runtime-settable under this deployment; keep going
+        except Exception as ex:  # non-runtime-settable under this deployment
+            logger.warning("could not set %s=%s: %s", key, value, ex)
     return spark
 
 

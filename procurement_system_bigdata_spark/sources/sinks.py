@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 from datetime import date
 
 from pyspark.sql import DataFrame
@@ -40,16 +41,30 @@ def write_single_csv(df: DataFrame, directory: str, filename: str) -> str:
     return final
 
 
+def write_json_file(path: str, obj) -> str:
+    """Pretty-print ``obj`` as JSON (indent=2, ``default=str``) to ``path``,
+    crash-safe: the dump goes to a temp file in the same directory, which
+    ``os.replace`` then moves into place, so a failure mid-dump leaves the
+    previous file intact and no partial file behind."""
+    directory = os.path.dirname(path) or "."
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f".{os.path.basename(path)}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "x") as f:
+            json.dump(obj, f, indent=2, default=str)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    return path
+
+
 def write_single_json(df: DataFrame, directory: str, filename: str) -> str:
     """S11: pretty-printed JSON array (json.dump indent=2 parity,
     reference pipeline.py:440-442).  Collects — sized for daily-batch
     result sets only, like the reference's own fetchall()."""
     rows = [r.asDict(recursive=True) for r in df.collect()]
-    os.makedirs(directory, exist_ok=True)
-    final = os.path.join(directory, filename)
-    with open(final, "w") as f:
-        json.dump(rows, f, indent=2, default=str)
-    return final
+    return write_json_file(os.path.join(directory, filename), rows)
 
 
 def write_task_log(
@@ -62,22 +77,16 @@ def write_task_log(
 
     ts = datetime.now(timezone.utc).strftime("%Y%m%d_%H%M%S")
     directory = day_dir(os.path.join(root, "logs", "tasks"), "", run_date).rstrip("/")
-    os.makedirs(directory, exist_ok=True)
-    final = os.path.join(directory, f"{task}_{ts}.json")
-    with open(final, "w") as f:
-        json.dump(
-            {
-                "task": task,
-                "run_date": run_date.isoformat(),
-                "timestamp": ts,
-                "status": status,
-                "details": details,
-            },
-            f,
-            indent=2,
-            default=str,
-        )
-    return final
+    return write_json_file(
+        os.path.join(directory, f"{task}_{ts}.json"),
+        {
+            "task": task,
+            "run_date": run_date.isoformat(),
+            "timestamp": ts,
+            "status": status,
+            "details": details,
+        },
+    )
 
 
 CASSANDRA_FORMAT = "org.apache.spark.sql.cassandra"

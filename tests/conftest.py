@@ -48,7 +48,6 @@ SLOW_TESTS = frozenset({
     "test_llmdata_ops.py::test_ann_reports_green_and_not_tautological",
     "test_round8_ops.py::test_ann_report_self_describes_sampling",
     "test_plan_quality.py::test_scan_counts_stay_minimized",
-    "test_golden_reference.py::test_stage_cache_equivalence",
     "test_plan_quality.py::test_media_family_band_join_shape",
     "test_bounded_oracle_audits.py::test_semantic_dup_rule_not_vacuous",
     "test_oracle_parity.py::test_query_matches_oracle[dedup_method_agreement]",

@@ -143,31 +143,3 @@ def test_summary_metrics_match_reference(results):
     assert s["total_net_demand"] == 43974
     assert abs(s["total_cost"] - 2631239.70) < 0.01
 
-
-def test_stage_cache_equivalence(spark, results):
-    """reuse_stages persistence is a pure execution-strategy choice: the
-    cached pipeline (the `results` fixture, default True) and a from-scratch
-    recompute-everything run must agree on every frame and every summary
-    metric."""
-    master = master_data_frames(spark)
-    orders = readers.read_orders_csv(spark, str(REF / "raw/orders" / DAY / "orders.csv"))
-    snaps = readers.read_snapshots_json(
-        spark, str(REF / "raw/snapshots" / DAY / "snapshot.json")
-    )
-    cold = pl.run_pipeline(
-        orders=orders,
-        products=master["products"],
-        warehouses=master["warehouses"],
-        suppliers=master["suppliers"],
-        supplier_products=master["supplier_products"],
-        safety_stock=master["safety_stock"],
-        ss_by_warehouse=master["safety_stock_by_warehouse"],
-        snapshots=snaps,
-        run_date=RUN_DATE,
-        reuse_stages=False,
-    )
-    assert cold["summary"] == results["summary"]
-    for key in ("aggregated_orders", "net_demand", "supplier_orders"):
-        a, b = cold[key], results[key]
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    results["release"]()

@@ -5,11 +5,14 @@ from __future__ import annotations
 
 import csv
 import json
+import os
 import tempfile
 from datetime import date
 from pathlib import Path
+from types import SimpleNamespace
 
 import pyspark.sql.functions as F
+import pytest
 
 from conftest import SF_DIR
 
@@ -61,6 +64,25 @@ def test_single_file_json_roundtrip(spark):
         data = json.load(open(path))
         assert len(data) == 5
         assert {"r_regionkey", "r_name"} <= set(data[0].keys())
+
+
+def test_single_file_json_write_is_crash_safe(spark, tmp_path, monkeypatch):
+    """A dump that raises partway leaves the last good file byte-for-byte
+    as it was, and no temp file behind."""
+    df = load_table(spark, SF_DIR, "region")
+    out = tmp_path / "out"
+    path = sinks.write_single_json(df, str(out), "region.json")
+    before = Path(path).read_bytes()
+
+    def dump_then_fail(obj, f, **kwargs):
+        f.write('[\n  {"r_regionkey": ')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(sinks, "json", SimpleNamespace(dump=dump_then_fail))
+    with pytest.raises(OSError, match="disk full"):
+        sinks.write_single_json(df, str(out), "region.json")
+    assert Path(path).read_bytes() == before
+    assert os.listdir(out) == ["region.json"]
 
 
 def test_partitioned_parquet_prunes(spark):

@@ -30,8 +30,8 @@ STATIC = {
     "S12": "sources/sinks.write_single_csv; golden daily-run flow",
     "S13": "sources/sinks.day_dir + write_partitioned (scale path)",
     "S14": "sources/sinks.write_task_log; tests/test_sources_sinks.py",
-    "P13": "operators/pipeline.net_demand (calculation_date append)",
-    "P14": "operators/pipeline.supplier_orders (PO-id synthesis) + queries supplier_orders",
+    "P13": "operators/pipeline.run_pipeline (calculation_date append)",
+    "P14": "operators/pipeline.number_purchase_orders (PO-id synthesis) + queries supplier_orders",
     "D1": "operators/pipeline.run_pipeline (sequential stage composition)",
     "D2": "per-stage retries AS CODE: operators/pipeline.retry_stage "
     "(retries=2, injectable delay — reference pipeline.py:806-811) wraps "
