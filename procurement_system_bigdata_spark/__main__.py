@@ -12,7 +12,7 @@ dags/pipeline.py:813-885); here the same day runs as::
 reading the reference's raw layout (orders/<dd-MM-yyyy>/orders.csv,
 snapshots/<dd-MM-yyyy>/snapshot.json), resolving master data from the
 Postgres init script (or a live database via --jdbc-url, the production
-path), and writing the three result datasets plus the summary JSON in the
+path; exactly one of the two is required), and writing the three result datasets plus the summary JSON in the
 reference's date-directory layout.  ``--partitioned`` switches the sinks to
 the scale path (parquet partitioned by run_date) instead of the
 single-file parity layout.
@@ -50,8 +50,9 @@ def main(argv: list[str] | None = None) -> dict:
     ap.add_argument("--date", required=True, help="run date, ISO yyyy-mm-dd")
     ap.add_argument("--raw-root", required=True, help="raw input root (orders/, snapshots/)")
     ap.add_argument("--out-root", required=True, help="output root (processed/, output/)")
-    ap.add_argument("--init-sql", default=None, help="Postgres init script for master data")
-    ap.add_argument("--jdbc-url", default=None, help="JDBC URL for live master data")
+    master_src = ap.add_mutually_exclusive_group(required=True)
+    master_src.add_argument("--init-sql", help="Postgres init script for master data")
+    master_src.add_argument("--jdbc-url", help="JDBC URL for live master data")
     ap.add_argument(
         "--partitioned", action="store_true",
         help="write run_date-partitioned parquet instead of single-file CSV/JSON",
@@ -64,9 +65,7 @@ def main(argv: list[str] | None = None) -> dict:
     if args.jdbc_url:
         master = {t: readers.read_jdbc_table(spark, args.jdbc_url, t) for t in MASTER_TABLES}
     else:
-        master = master_sql.master_data_frames(
-            spark, **({"sql_path": args.init_sql} if args.init_sql else {})
-        )
+        master = master_sql.master_data_frames(spark, args.init_sql)
 
     orders = readers.read_orders_csv(spark, f"{args.raw_root}/orders/{day}/orders.csv")
     snaps = readers.read_snapshots_json(spark, f"{args.raw_root}/snapshots/{day}/snapshot.json")

@@ -262,13 +262,26 @@ def run_pipeline(
     driver function.  Returns the three result DataFrames plus the summary
     metrics dict (XCom replacement; 0-defaults like trigger_rule=all_done).
 
-    D2: job-executing stages run under the reference's per-task retry
-    policy (``stage_retries`` defaults to the reference's 2;
-    ``retry_delay_sec`` defaults to 0 for an in-process run — pass
-    STAGE_RETRY_DELAY_SEC for the reference's 5-min spacing; tests inject
-    ``retry_sleep``).  A stage that exhausts retries does NOT abort the
-    run: the summary is all_done (reference task 8) — its metrics emit
-    0-defaults and ``failed_stages`` names what failed.
+    D2: every action runs under the reference's per-task retry policy
+    (``stage_retries`` defaults to the reference's 2; ``retry_delay_sec``
+    defaults to 0 for an in-process run — pass STAGE_RETRY_DELAY_SEC for
+    the reference's 5-min spacing; tests inject ``retry_sleep``).  An
+    action that exhausts retries does NOT abort the run: the summary is
+    all_done (reference task 8) — its metrics emit 0-defaults and
+    ``failed_stages`` names them.
+
+    The summary runs one action per persisted output.  ``orders_count`` and
+    ``aggregated_count`` count the day's orders and the Q1 frame; one
+    aggregate over the net_demand frame yields ``net_demand_count``,
+    ``total_net_demand`` and ``items_with_demand``; Q3 is built, persisted
+    and materialized by the one aggregate that yields
+    ``supplier_orders_count`` and ``total_cost``, all inside the
+    ``generate_supplier_orders`` retry (reference task 7), so a Q3 failure
+    leaves ``supplier_orders`` None and names the stage and both metrics.
+    The net-demand metrics run before Q3 is built: ``items_with_demand`` is
+    an upper bound on Q3's rows, and passing it to
+    ``number_purchase_orders`` spares the numbering its checkpoint and
+    count job.
 
     The reference re-derives the shared CTEs inside every query; here each
     output is built once and persisted, so the summary's actions and the
@@ -301,57 +314,73 @@ def run_pipeline(
         .persist()
     )
     persisted: list[DataFrame] = [agg, nd]
-    rs = ranked_suppliers(supplier_products, suppliers)
     failed_stages: list[str] = []
-    # generate_supplier_orders is the one stage whose BUILD already runs jobs
-    # (the adaptive-numbering count in with_global_sequence), so the build
-    # itself runs under the task retry policy, like reference task 7.
-    try:
-        so = retry_stage(
-            lambda: (
-                number_purchase_orders(supplier_orders(nd, rs, run_date), run_date)
-                .orderBy(F.desc("total_cost"), "sku_id", "warehouse_id")
-            ),
-            stage="generate_supplier_orders",
-            retries=stage_retries,
-            delay_sec=retry_delay_sec,
-            sleep=retry_sleep,
-        ).persist()
-        persisted.append(so)
-    except Exception:  # noqa: BLE001 — downstream summary is all_done
-        so = None
-        failed_stages.append("generate_supplier_orders")
 
-    # D2 + D4: each summary action runs under the reference's retry policy
-    # (retries=2); the summary itself is trigger_rule=all_done — a metric
-    # whose stage exhausts retries degrades to its 0-default instead of
-    # aborting the run, and the failure is reported in failed_stages.
-    metric_stages: list[tuple[str, Callable[[], object], object]] = [
-        ("orders_count", lambda: orders.count(), 0),
-        ("aggregated_count", lambda: agg.count(), 0),
-        ("net_demand_count", lambda: nd.count(), 0),
-        ("total_net_demand", lambda: nd.agg(F.sum("net_demand")).first()[0] or 0, 0),
-        ("items_with_demand", lambda: nd.filter(F.col("net_demand") > 0).count(), 0),
-        ("supplier_orders_count", lambda: so.count(), 0),
-        ("total_cost", lambda: float(so.agg(F.sum("total_cost")).first()[0] or 0.0), 0.0),
-    ]
-    summary: dict = {"run_date": run_date.isoformat()}
-    for name, thunk, default in metric_stages:
-        if so is None and name in ("supplier_orders_count", "total_cost"):
-            summary[name] = default
-            failed_stages.append(name)
-            continue
+    def action(thunk: Callable[[], dict], defaults: dict, stage: str | None = None) -> dict:
+        """D2 + D4: one summary action under the reference's retry policy.
+        The summary is trigger_rule=all_done: when the action exhausts its
+        retries its metrics take their 0-defaults and failed_stages names
+        them, after ``stage`` if the action also builds one."""
+        names = ([stage] if stage else []) + list(defaults)
         try:
-            summary[name] = retry_stage(
+            return retry_stage(
                 thunk,
-                stage=name,
+                stage=",".join(names),
                 retries=stage_retries,
                 delay_sec=retry_delay_sec,
                 sleep=retry_sleep,
             )
         except Exception:  # noqa: BLE001 — all_done summary absorbs stage failure
-            summary[name] = default
-            failed_stages.append(name)
+            failed_stages.extend(names)
+            return dict(defaults)
+
+    def net_demand_metrics() -> dict:
+        count, total, with_demand = nd.agg(
+            F.count(F.lit(1)), F.sum("net_demand"), F.count_if(F.col("net_demand") > 0)
+        ).first()
+        return {
+            "net_demand_count": count,
+            "total_net_demand": total or 0,
+            "items_with_demand": with_demand,
+        }
+
+    summary: dict = {"run_date": run_date.isoformat()}
+    summary |= action(lambda: {"orders_count": orders.count()}, {"orders_count": 0})
+    summary |= action(lambda: {"aggregated_count": agg.count()}, {"aggregated_count": 0})
+    summary |= action(
+        net_demand_metrics,
+        {"net_demand_count": 0, "total_net_demand": 0, "items_with_demand": 0},
+    )
+    # Q3's rows are net_demand > 0 rows inner-joined to one rank-1 offer per
+    # SKU, so items_with_demand is an upper bound on them and the PO
+    # numbering skips its checkpoint and count job; no bound if that failed.
+    n_rows = None if "items_with_demand" in failed_stages else summary["items_with_demand"]
+    rs = ranked_suppliers(supplier_products, suppliers)
+    so: DataFrame | None = None
+
+    def build_supplier_orders() -> dict:
+        # reference task 7: the one action that materializes the persisted
+        # Q3 frame also yields its two metrics
+        nonlocal so
+        built = (
+            number_purchase_orders(supplier_orders(nd, rs, run_date), run_date, n_rows=n_rows)
+            .orderBy(F.desc("total_cost"), "sku_id", "warehouse_id")
+            .persist()
+        )
+        try:
+            count, cost = built.agg(F.count(F.lit(1)), F.sum("total_cost")).first()
+        except Exception:
+            built.unpersist()
+            raise
+        so = built
+        persisted.append(so)
+        return {"supplier_orders_count": count, "total_cost": float(cost or 0.0)}
+
+    summary |= action(
+        build_supplier_orders,
+        {"supplier_orders_count": 0, "total_cost": 0.0},
+        stage="generate_supplier_orders",
+    )
 
     def release() -> None:
         for df in persisted:

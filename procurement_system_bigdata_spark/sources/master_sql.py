@@ -137,15 +137,36 @@ def parse_inserts(sql_path: str = INIT_SQL) -> dict[str, list[list]]:
     return out
 
 
+def _arrow_frame(spark, rows: list[tuple], schema):
+    """One DataFrame of ``schema`` from row tuples, via a ``pyarrow.Table``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    columns = {name: [r[i] for r in rows] for i, name in enumerate(schema.fieldNames())}
+    table = pa.Table.from_pydict(columns, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
 def master_data_frames(spark, sql_path: str = INIT_SQL):
     """Build the six master-data DataFrames with BIGSERIAL ids assigned in
-    insert order (1-based), matching Postgres behavior."""
+    insert order (1-based), matching Postgres behavior.
+
+    The frames are built from Arrow tables, not Python lists.
+    ``createDataFrame(<list>)`` parallelizes the rows as pickled Python
+    objects, so every scan of the frame runs Python workers to unpickle
+    them: a traced daily run showed 0.9-1.3 s of executor time per
+    master-table broadcast for ~20 ms of CPU.  An Arrow table below
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    ``LocalRelation``: plans read a ``LocalTableScan`` and no Python worker
+    runs on any scan."""
     from decimal import Decimal
 
     from procurement_system_bigdata_spark import schemas
 
     ins = parse_inserts(sql_path)
-    now = datetime(2026, 1, 1)
+    # NOW(), pinned for reproducible rows: midnight local time, the instant
+    # createDataFrame(<list>) made of the naive datetime
+    now = datetime(2026, 1, 1).astimezone()
 
     suppliers = [
         (i + 1, code, name, email, phone, active, now)
@@ -167,10 +188,10 @@ def master_data_frames(spark, sql_path: str = INIT_SQL):
     ssw = [(wh, sku, qty) for (wh, sku, qty, _ts) in ins["safety_stock_by_warehouse"]]
 
     return {
-        "suppliers": spark.createDataFrame(suppliers, schemas.SUPPLIERS),
-        "products": spark.createDataFrame(products, schemas.PRODUCTS),
-        "warehouses": spark.createDataFrame(warehouses, schemas.WAREHOUSES),
-        "supplier_products": spark.createDataFrame(supplier_products, schemas.SUPPLIER_PRODUCTS),
-        "safety_stock": spark.createDataFrame(safety_stock, schemas.SAFETY_STOCK),
-        "safety_stock_by_warehouse": spark.createDataFrame(ssw, schemas.SAFETY_STOCK_BY_WAREHOUSE),
+        "suppliers": _arrow_frame(spark, suppliers, schemas.SUPPLIERS),
+        "products": _arrow_frame(spark, products, schemas.PRODUCTS),
+        "warehouses": _arrow_frame(spark, warehouses, schemas.WAREHOUSES),
+        "supplier_products": _arrow_frame(spark, supplier_products, schemas.SUPPLIER_PRODUCTS),
+        "safety_stock": _arrow_frame(spark, safety_stock, schemas.SAFETY_STOCK),
+        "safety_stock_by_warehouse": _arrow_frame(spark, ssw, schemas.SAFETY_STOCK_BY_WAREHOUSE),
     }

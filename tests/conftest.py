@@ -58,7 +58,6 @@ SLOW_TESTS = frozenset({
     "test_llmdata_ops.py::test_semantic_curation_composition",
     "test_streaming_multimodal.py::test_stateful_spend_totals_equal_batch",
     "test_sources_sinks.py::test_nightly_curation_writes_pinned_versions",
-    "test_retries.py::test_pipeline_recovers_from_transient_stage_failure",
     "test_ranking_and_properties.py::test_pii_scrub_is_idempotent_and_entropy_bounded",
     "test_sources_sinks.py::test_cassandra_writer_contract_via_lww_store",
     "test_clustering.py::test_dedup_clusters_partitions_docs",
@@ -90,7 +89,6 @@ SLOW_TESTS = frozenset({
     "test_llmdata_ops.py::test_minhash_production_dial_recall",
     "test_llmdata_ops.py::test_minhash_fast_hash_dial",
     "test_bounded_oracle_audits.py::test_packed_sequences_matches_bounded_oracle",
-    "test_retries.py::test_pipeline_summary_emits_zero_defaults_on_exhausted_retries",
     "test_oracle_parity.py::test_oracle_query_output_is_driver_sortable[doc_pagerank]",
     "test_plan_quality.py::test_round3_ops_stay_jvm_side_and_broadcast",
     "test_round10_ops.py::test_video_star_edges_components_match_clique_graph",

@@ -8,6 +8,8 @@ import csv
 import json
 from pathlib import Path
 
+import pytest
+
 from procurement_system_bigdata_spark.__main__ import main
 
 
@@ -34,3 +36,22 @@ def test_cli_reproduces_reference_day(spark, tmp_path):
     s = json.load(open(Path(tmp_path, "output/pipeline_summary", f"summary_{day}.json")))
     assert s["supplier_orders_count"] == 348
     assert list(Path(tmp_path, "logs/tasks", day).glob("daily_pipeline_*.json"))
+
+
+@pytest.mark.parametrize(
+    "master_flags",
+    [[], ["--init-sql", "a.sql", "--jdbc-url", "jdbc:x"]],
+    ids=["neither", "both"],
+)
+def test_cli_requires_exactly_one_master_data_source(tmp_path, master_flags):
+    """Master data comes from --init-sql or --jdbc-url, never a default
+    path: a run with neither (or both) is a usage error, before any Spark
+    work starts."""
+    with pytest.raises(SystemExit) as exc:
+        main([
+            "--date", "2026-01-14",
+            "--raw-root", str(tmp_path / "raw"),
+            "--out-root", str(tmp_path / "out"),
+            *master_flags,
+        ])
+    assert exc.value.code == 2

@@ -5,23 +5,32 @@ all_done summary still emits, 0-defaulted, when a stage exhausts retries).
 The transient fault is injected as a REAL failing Spark job (a mapInPandas
 task that raises until a cross-attempt counter file passes the threshold),
 so the retry wrapper is exercised against actual job failures, not mocked
-exceptions."""
+exceptions.  The pipeline-level tests run on the seeded tiny generated day
+(perfbench/gen_daily.py), like tests/test_daily_run.py."""
 
 from __future__ import annotations
 
-from datetime import date
-from pathlib import Path
+import os
+import sys
 
 import pytest
 
 from procurement_system_bigdata_spark.operators import pipeline as pl
-from procurement_system_bigdata_spark.sources import readers
+from procurement_system_bigdata_spark.sources import master_sql, readers
 
-from sql_fixtures import master_data_frames
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+)
 
-REF = Path("/root/reference/data")
-RUN_DATE = date(2026, 1, 14)
-DAY = "14-01-2026"
+import gen_daily  # noqa: E402
+
+SEED = 7
+RUN_DATE = gen_daily.RUN_DATE
+SUMMARY_KEYS = (
+    "run_date", "orders_count", "aggregated_count", "net_demand_count",
+    "total_net_demand", "items_with_demand", "supplier_orders_count",
+    "total_cost",
+)
 
 
 # --- retry_stage unit semantics ------------------------------------------
@@ -89,15 +98,22 @@ def _flaky_scan(df, counter_path: str, fail_times: int):
 
 
 @pytest.fixture(scope="module")
-def pipeline_inputs(spark):
-    master = master_data_frames(spark)
-    orders = readers.read_orders_csv(
-        spark, str(REF / "raw/orders" / DAY / "orders.csv")
-    )
-    snaps = readers.read_snapshots_json(
-        spark, str(REF / "raw/snapshots" / DAY / "snapshot.json")
-    )
+def pipeline_inputs(spark, tmp_path_factory):
+    root, _ = gen_daily.ensure_daily_inputs(str(tmp_path_factory.mktemp("day")), SEED, "tiny")
+    paths = gen_daily.daily_paths(root)
+    master = master_sql.master_data_frames(spark, paths["init_sql"])
+    orders = readers.read_orders_csv(spark, paths["orders"])
+    snaps = readers.read_snapshots_json(spark, paths["snapshots"])
     return master, orders, snaps
+
+
+@pytest.fixture(scope="module")
+def clean_summary(pipeline_inputs):
+    out = _run(*pipeline_inputs)
+    assert out["failed_stages"] == []
+    assert out["summary"]["supplier_orders_count"] > 0
+    out["release"]()
+    return out["summary"]
 
 
 def _run(master, orders, snaps, **kw):
@@ -116,15 +132,11 @@ def _run(master, orders, snaps, **kw):
 
 
 def test_pipeline_recovers_from_transient_stage_failure(
-    pipeline_inputs, tmp_path
+    pipeline_inputs, clean_summary, tmp_path
 ):
     """A stage failing twice then succeeding yields the COMPLETE summary —
     identical to a clean run — with both retry delays taken."""
     master, orders, snaps = pipeline_inputs
-    clean = _run(master, orders, snaps)
-    clean_summary = clean["summary"]
-    clean["release"]()
-
     sleeps: list[float] = []
     flaky = _flaky_scan(orders, str(tmp_path / "ctr"), fail_times=2)
     out = _run(
@@ -137,6 +149,7 @@ def test_pipeline_recovers_from_transient_stage_failure(
     )
     assert out["failed_stages"] == []
     assert out["summary"] == clean_summary
+    assert list(out["summary"]) == list(SUMMARY_KEYS)
     assert sleeps == [1.5, 1.5]
     out["release"]()
 
@@ -158,16 +171,41 @@ def test_pipeline_summary_emits_zero_defaults_on_exhausted_retries(
         retry_sleep=lambda _: None,
     )
     summary = out["summary"]
-    expected_keys = {
-        "run_date", "orders_count", "aggregated_count", "net_demand_count",
-        "total_net_demand", "items_with_demand", "supplier_orders_count",
-        "total_cost",
-    }
-    assert set(summary) == expected_keys  # complete despite failures
+    assert list(summary) == list(SUMMARY_KEYS)  # complete despite failures
     assert summary["run_date"] == RUN_DATE.isoformat()
-    for k in expected_keys - {"run_date"}:
+    for k in SUMMARY_KEYS[1:]:
         assert summary[k] == 0, k
-    assert "generate_supplier_orders" in out["failed_stages"]
-    assert "orders_count" in out["failed_stages"]
+    assert set(out["failed_stages"]) == {"generate_supplier_orders", *SUMMARY_KEYS[1:]}
     assert out["supplier_orders"] is None
+    out["release"]()
+
+
+def test_pipeline_supplier_orders_failure_degrades_only_its_metrics(
+    pipeline_inputs, clean_summary, tmp_path
+):
+    """A Q3 input that never scans fails generate_supplier_orders alone: its
+    two metrics are 0-defaulted and named with it, supplier_orders is None,
+    and every other metric equals a clean run's."""
+    master, orders, snaps = pipeline_inputs
+    flaky_offers = _flaky_scan(
+        master["supplier_products"], str(tmp_path / "ctr"), fail_times=10_000
+    )
+    out = _run(
+        dict(master, supplier_products=flaky_offers),
+        orders,
+        snaps,
+        stage_retries=1,
+        retry_delay_sec=0.0,
+        retry_sleep=lambda _: None,
+    )
+    assert set(out["failed_stages"]) == {
+        "generate_supplier_orders", "supplier_orders_count", "total_cost",
+    }
+    assert out["supplier_orders"] is None
+    summary = out["summary"]
+    assert list(summary) == list(SUMMARY_KEYS)
+    assert summary["supplier_orders_count"] == 0
+    assert summary["total_cost"] == 0.0
+    for k in SUMMARY_KEYS[:-2]:
+        assert summary[k] == clean_summary[k], k
     out["release"]()
