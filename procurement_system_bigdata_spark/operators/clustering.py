@@ -25,7 +25,7 @@ SQL DAG); this is a training-data extension (EXT class).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -108,18 +108,21 @@ def connected_components(
         F.col("node").alias("component"),
         F.lit(0).cast("int").alias("hop"),
     )
+    # a projection of the checkpointed ``touched``: no checkpoint of its own
     labels = touched.select(
         "node",
         F.col("node").alias("component"),
         F.lit(0).cast("int").alias("hop"),
     )
-    labels = labels.localCheckpoint()
     changed = 0
     # try/finally (ADVICE r10): a Spark job failing mid-loop must release
     # the persisted edge table too — a long-lived session (sweeps, tests)
     # must not accumulate one pinned edge table per failed components call
     try:
         for rnd in range(1, max_rounds + 1):
+            # ``changed`` is observed on the round's checkpointing action
+            # itself, so a round costs no separate count job
+            round_obs = Observation()
             nbr_min = (
                 sym.join(labels, sym.dst == labels.node)
                 .groupBy("src")
@@ -142,10 +145,12 @@ def connected_components(
                     .otherwise(F.col("hop"))
                     .alias("hop"),
                 )
+                .observe(
+                    round_obs,
+                    F.count_if(F.col("new_component") < F.col("component")).alias("changed"),
+                )
             ).localCheckpoint()
-            changed = proposed.filter(
-                F.col("new_component") < F.col("component")
-            ).count()
+            changed = round_obs.get["changed"]
             labels = proposed.select(
                 "node", F.col("new_component").alias("component"), "hop"
             )

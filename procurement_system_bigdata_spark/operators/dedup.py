@@ -316,12 +316,15 @@ def minhash_signatures(
 
 def _signature_aggs(k: int, h_col: str = "h"):
     """The K min() affine-transform aggregates over a token-hash column —
-    shared by minhash_signatures and the fused one-tokenize path."""
+    shared by minhash_signatures and the fused one-tokenize path.
+
+    Each aggregate is built from one SQL string: one py4j call per column
+    instead of about six for the lit/col/arithmetic/alias chain.  The
+    integer literals parse as INT, as ``F.lit`` makes them, so the
+    signatures are bit-identical."""
     a_coef, b_coef = P.minhash_params(k)
     return [
-        F.min(
-            (F.lit(a_coef[i]) * F.col(h_col) + F.lit(b_coef[i])) % P.HASH_P
-        ).alias(f"m{i}")
+        F.expr(f"min(({a_coef[i]} * {h_col} + {b_coef[i]}) % {P.HASH_P}) AS m{i}")
         for i in range(k)
     ]
 
@@ -428,11 +431,21 @@ def _confirm_jaccard(
     )
 
 
-def _band_key_cols(r: int, n_bands: int):
-    return [
-        F.concat_ws("-", *[F.col(f"m{b * r + j}") for j in range(r)]).alias(f"band{b}")
-        for b in range(n_bands)
-    ]
+def _band_stack(sigs: DataFrame, r: int, n_bands: int, out_id: str = "doc_id") -> DataFrame:
+    """(out_id, band, key): one row per document and band, from a signature
+    table with ``doc_id`` and ``m0..m{K-1}``.
+
+    One explode, not an n_bands-way union: a 32-branch union is 32 plan
+    subtrees and 32 task sets; the exploded struct array is a single
+    narrow pass emitting the same rows.  Built as one SQL projection, so
+    its py4j cost does not grow with n_bands.  A band's key is its r
+    signature columns joined with '-'."""
+    band_cols = [", ".join(f"m{b * r + j}" for j in range(r)) for b in range(n_bands)]
+    structs = ", ".join(
+        f"named_struct('band', {b}, 'key', concat_ws('-', {cols}))"
+        for b, cols in enumerate(band_cols)
+    )
+    return sigs.selectExpr(f"doc_id AS {out_id}", f"inline(array({structs}))")
 
 
 def minhash_lsh_pairs(
@@ -480,23 +493,7 @@ def minhash_lsh_pairs(
     sigs = tok2.groupBy("doc_id").agg(*_signature_aggs(k)).localCheckpoint(
         eager=False
     )
-    bands = sigs.select("doc_id", *_band_key_cols(r, n_bands))
-    # one explode, not an n_bands-way union: a 32-branch union is 32 plan
-    # subtrees and 32 task sets; the exploded struct array is a single
-    # narrow pass emitting the same (doc_id, band, key) rows
-    stacked = bands.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), F.col(f"band{b}").alias("key")
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    stacked = _band_stack(sigs, r, n_bands)
     a, b_ = stacked.alias("a"), stacked.alias("b")
     cand = (
         a.join(
@@ -652,20 +649,7 @@ def minhash_star_edges(
         .agg(*_signature_aggs(k))
         .localCheckpoint(eager=False)
     )
-    bands = rep_sigs.select("doc_id", *_band_key_cols(r, n_bands))
-    stacked = bands.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), F.col(f"band{b}").alias("key")
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    stacked = _band_stack(rep_sigs, r, n_bands)
     a, b_ = stacked.alias("a"), stacked.alias("b")
     cand = (
         a.join(
@@ -1087,20 +1071,7 @@ def incremental_neardup_pairs(
 
     def _stack(tok2: DataFrame, out_id: str) -> DataFrame:
         sigs = tok2.groupBy("doc_id").agg(*_signature_aggs(k))
-        bands = sigs.select("doc_id", *_band_key_cols(r, n_bands))
-        return bands.select(
-            F.col("doc_id").alias(out_id),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"), F.col(f"band{b}").alias("key")
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(out_id, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        return _band_stack(sigs, r, n_bands, out_id)
 
     cand = (
         _stack(tok_new, "new_id")

@@ -28,7 +28,7 @@ tiebreaks on any top-k boundary.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -537,25 +537,24 @@ def q_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     maximum — the revenue-view + scalar-max pattern, tie-preserving (Q15
     explicitly keeps ties; exact cents make the equality safe cross-engine).
 
-    Scale shape: the per-supplier aggregate (one shuffle) is checkpointed
-    and reused for both the max and the filter — no second scan; the 1-row
-    max attaches by broadcast; supplier names attach by broadcast."""
+    Scale shape: one pass over ``lineitem``.  The scalar max is a window
+    over the whole per-supplier aggregate (|supplier| rows in one
+    partition), so the aggregate feeds both the max and the filter without
+    a second scan or a checkpoint at build; supplier names attach by
+    broadcast."""
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit(TOP_SUPP_FROM).cast("timestamp"))
         & (F.col("l_shipdate") < F.lit(TOP_SUPP_TO).cast("timestamp"))
     )
     rev = _bp(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    per_supp = (
-        li.groupBy(F.col("l_suppkey").cast("long").alias("s_suppkey"))
-        .agg(F.sum(rev).alias("rev_bp"))
-        .localCheckpoint()
+    per_supp = li.groupBy(F.col("l_suppkey").cast("long").alias("s_suppkey")).agg(
+        F.sum(rev).alias("rev_bp")
     )
-    top = per_supp.agg(F.max("rev_bp").alias("max_bp"))
     supp = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").cast("long").alias("sk"), "s_name"
     )
     return (
-        per_supp.crossJoin(F.broadcast(top))
+        per_supp.withColumn("max_bp", F.max("rev_bp").over(Window.partitionBy()))
         .filter(F.col("rev_bp") == F.col("max_bp"))
         .join(F.broadcast(supp), F.col("s_suppkey") == F.col("sk"))
         .select("s_suppkey", "s_name", (F.col("rev_bp") / 10000.0).alias("total_revenue"))

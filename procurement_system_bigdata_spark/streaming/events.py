@@ -628,23 +628,7 @@ def neardup_ingest_batch_fn(
         return sigs.join(hs, "doc_id")
 
     def _stack(rows: DataFrame, out_id: str) -> DataFrame:
-        bands = rows.select("doc_id", *dd._band_key_cols(r, n_bands))
-        return bands.select(
-            F.col("doc_id").alias(out_id),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.col(f"band{b}").alias("key"),
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(
-            out_id, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-        )
+        return dd._band_stack(rows, r, n_bands, out_id)
 
     def _confirmed(cand: DataFrame, left: DataFrame, right: DataFrame):
         # fused single-intersect confirm (round-11) — the shared batch

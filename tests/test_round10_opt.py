@@ -68,7 +68,11 @@ def test_minhash_pairs_unchanged_by_dedup_and_sort_removal(spark):
     )
     r = P.MINHASH_K_ORACLE // P.MINHASH_BANDS_ORACLE
     bands = sigs.select(
-        "doc_id", *dedup._band_key_cols(r, P.MINHASH_BANDS_ORACLE)
+        "doc_id",
+        *[
+            F.concat_ws("-", *[F.col(f"m{b * r + j}") for j in range(r)]).alias(f"band{b}")
+            for b in range(P.MINHASH_BANDS_ORACLE)
+        ],
     )
     stacked = bands.select(
         "doc_id",
