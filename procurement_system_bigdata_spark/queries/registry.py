@@ -517,10 +517,9 @@ _register(
         name="dedup_clusters_star",
         fn=llmdata.q_dedup_clusters_star,
         oracle=llmdata.Q_DEDUP_CLUSTERS_STAR_SQL,
-        description="Near-dup clusters over the STAR-EDGE feed (round-10: "
-        "the text twin of the media star-edge fix): docs group by exact "
-        "token-set signature (md5 of the sorted wide-key set), banded "
-        "minhash + exact-Jaccard confirm over DISTINCT token sets only, "
+        description="Near-dup clusters over the STAR-EDGE feed (round-10): "
+        "docs group by exact token-set signature (md5 of the sorted "
+        "wide-key set), banded minhash + exact-Jaccard confirm over DISTINCT token sets only, "
         "star edge per duplicate-class member + bridge per confirmed "
         "class pair -> connected components — Pregel input linear in "
         "class size, components identical to the pair-graph feed's "
@@ -766,278 +765,6 @@ _register(
         "anti-joins (engine form of the reference's row-count/schema "
         "validation claims)",
         ops=("S10", "A5", "EXT-profiling"),
-    )
-)
-_register(
-    QuerySpec(
-        name="media_resize",
-        fn=llmdata.q_media_resize,
-        oracle=llmdata.Q_MEDIA_RESIZE_SQL,
-        description="Real-codec image decode + nearest-neighbor resize over "
-        "Arrow mapInPandas; FULL oracle incl. content_md5 of the resized "
-        "payload (256-class digest precompute through the real "
-        "decode/resize/encode path), so pixel content is hash-checked",
-        ops=("EXT-multimodal",),
-    )
-)
-_register(
-    QuerySpec(
-        name="media_decode",
-        fn=llmdata.q_media_decode,
-        oracle=llmdata.Q_MEDIA_DECODE_SQL,
-        description="Compressed-codec decode audit: mixed PPM/PNG/JPEG "
-        "corpus decoded through the codecs.decode_image sniff seam (real "
-        "zlib-inflate PNG + baseline DCT/Huffman JPEG decoders, round-8); "
-        "FULL oracle — decoded-pixel md5 pinned exactly for lossless AND "
-        "lossy rows via the 256-class encode->decode precompute",
-        ops=("EXT-multimodal",),
-    )
-)
-_register(
-    QuerySpec(
-        name="media_decode_subsampled",
-        fn=llmdata.q_media_decode_subsampled,
-        oracle=llmdata.Q_MEDIA_DECODE_SUBSAMPLED_SQL,
-        description="Chroma-subsampled JPEG decode audit (round-9): 4:2:0 "
-        "and 4:2:2 payloads — the dominant real-corpus profile — decoded "
-        "on the baseline DCT/Huffman path (2x2-mean downsample encode, "
-        "replication upsample decode); FULL oracle via two 256-class "
-        "pixel-digest precomputes",
-        ops=("EXT-multimodal",),
-    )
-)
-_register(
-    QuerySpec(
-        name="media_decode_progressive",
-        fn=llmdata.q_media_decode_progressive,
-        oracle=llmdata.Q_MEDIA_DECODE_PROGRESSIVE_SQL,
-        description="Progressive (SOF2) JPEG decode audit (round-10): "
-        "4:4:4 and 4:2:0 progressive payloads decoded with the real "
-        "spectral-selection + successive-approximation scan loop (full "
-        "EOBn semantics; T.81 G.2) — the last frequent real-corpus JPEG "
-        "profile opens; FULL oracle via two 256-class pixel-digest "
-        "precomputes, pinned equal to the baseline digests in tests",
-        ops=("EXT-multimodal",),
-    )
-)
-_register(
-    QuerySpec(
-        name="media_decode_interlaced",
-        fn=llmdata.q_media_decode_interlaced,
-        oracle=llmdata.Q_MEDIA_DECODE_INTERLACED_SQL,
-        description="Adam7-interlaced PNG decode audit (round-9): per-pass "
-        "unfilter + scatter onto the output grid, lossless — FULL oracle "
-        "pins exact gradient digests per class, err_ok requires "
-        "exact-zero reconstruction",
-        ops=("EXT-multimodal",),
-    )
-)
-_register(
-    QuerySpec(
-        name="image_dhash",
-        fn=llmdata.q_image_dhash,
-        oracle=llmdata.Q_IMAGE_DHASH_SQL,
-        description="Perceptual 64-bit difference hash over really-decoded "
-        "PPM/PNG payloads + the 4x16-bit band keys (round-8); FULL oracle "
-        "via the 256-class synth->encode->decode precompute",
-        ops=("EXT-multimodal", "EXT-dedup"),
-    )
-)
-_register(
-    QuerySpec(
-        name="image_neardup",
-        fn=llmdata.q_image_neardup,
-        oracle=llmdata.Q_IMAGE_NEARDUP_SQL,
-        description="Perceptual image near-dup pairs: banded dHash "
-        "candidates verified with exact 64-bit Hamming in column ops "
-        "(conv+xor+bit_count, no UDF past the decode stage); planted "
-        "one-block perturbations at 0-2 bits vs >=11 for unrelated "
-        "patterns; FULL class-pair oracle",
-        ops=("EXT-multimodal", "EXT-dedup"),
-    )
-)
-_register(
-    QuerySpec(
-        name="image_dedup_clusters",
-        fn=llmdata.q_image_dedup_clusters,
-        oracle=llmdata.Q_IMAGE_DEDUP_CLUSTERS_SQL,
-        description="Full perceptual image-dedup pipeline: dHash -> "
-        "star+bridge edges (round-9: banded Hamming join over DISTINCT "
-        "signatures, one star edge per duplicate-class member — Pregel "
-        "input linear in class size) -> DataFrame-Pregel connected "
-        "components -> canonical per cluster; FULL oracle via union-find "
-        "over the confirmed class-pair graph (exact when every class is "
-        "populated, true at all registry SFs)",
-        ops=("EXT-multimodal", "EXT-dedup", "EXT-clustering"),
-    )
-)
-_register(
-    QuerySpec(
-        name="audio_fingerprint",
-        fn=llmdata.q_audio_fingerprint,
-        oracle=llmdata.Q_AUDIO_FINGERPRINT_SQL,
-        description="Per-window zero-crossing fingerprint over really-"
-        "decoded PCM samples (round-8 audio-dedup signature); FULL oracle "
-        "via the 128-class synth->encode->decode precompute",
-        ops=("EXT-multimodal", "EXT-dedup"),
-    )
-)
-_register(
-    QuerySpec(
-        name="audio_neardup",
-        fn=llmdata.q_audio_neardup,
-        oracle=llmdata.Q_AUDIO_NEARDUP_SQL,
-        description="Audio near-dup pairs: two-offset-grid bucket "
-        "candidates (guaranteed recall for max-dev<=1) verified with the "
-        "exact max per-window zero-crossing deviation in column ops; "
-        "planted +2Hz detune pairs at max-dev<=1 vs >=2 for adjacent "
-        "tone groups; FULL class-pair oracle",
-        ops=("EXT-multimodal", "EXT-dedup"),
-    )
-)
-_register(
-    QuerySpec(
-        name="video_fingerprint",
-        fn=llmdata.q_video_fingerprint,
-        oracle=llmdata.Q_VIDEO_FINGERPRINT_SQL,
-        description="Per-clip sampled-frame dHash sequence over the RAWV "
-        "container (round-9 video-dedup signature; skipped frames never "
-        "materialize); FULL oracle via the 256-class precompute",
-        ops=("EXT-multimodal", "EXT-dedup"),
-    )
-)
-_register(
-    QuerySpec(
-        name="video_neardup",
-        fn=llmdata.q_video_neardup,
-        oracle=llmdata.Q_VIDEO_NEARDUP_SQL,
-        description="Video near-dup pairs (round-9): per-position banded "
-        "frame-hash candidates (pigeonhole guarantee at max-hamming<=3) "
-        "verified with the exact MAX per-position 64-bit Hamming in "
-        "column ops; planted consecutive-class clips at 1-2 bits vs >=16 "
-        "for any other pair; FULL class-pair oracle.  Recall note "
-        "(round-10 advisor): the confirm threshold 6 exceeds the "
-        "per-position pigeonhole guarantee 3, so 4-6-bit pairs whose "
-        "differing bits touch all four bands at EVERY sampled position "
-        "are unguaranteed — same geometry as the image family, where "
-        "tools/probe_media_banding_recall.py measures the real-corpus "
-        "4-7-bit region at recall 1.0 (clustered-bit pairs, e.g. planted "
-        "h=6/7: 380/380) with misses only at h>=8, beyond the confirm "
-        "threshold; the oracle mirrors the same candidacy so the gate "
-        "checks agreement, and the probe is the recall dial",
-        ops=("EXT-multimodal", "EXT-dedup"),
-    )
-)
-_register(
-    QuerySpec(
-        name="video_dedup_clusters",
-        fn=llmdata.q_video_dedup_clusters,
-        oracle=llmdata.Q_VIDEO_DEDUP_CLUSTERS_SQL,
-        description="Full video-dedup pipeline (round-10): sampled-frame "
-        "dHash sequence -> star+bridge edges (per-position band join over "
-        "DISTINCT signatures, one star edge per duplicate-class member — "
-        "Pregel input linear in class size) -> connected components -> "
-        "canonical per clip; completes the image/audio/video pipeline "
-        "symmetry; FULL oracle via 256-class union-find",
-        ops=("EXT-multimodal", "EXT-dedup", "EXT-clustering"),
-    )
-)
-_register(
-    QuerySpec(
-        name="media_decode_lossless",
-        fn=llmdata.q_media_decode_lossless,
-        oracle=llmdata.Q_MEDIA_DECODE_LOSSLESS_SQL,
-        description="Lossless (SOF3) JPEG decode audit (round-10): "
-        "literal-component predictor coding per T.81 Annex H (all 7 "
-        "predictors cycled across the corpus), reconstruction modulo "
-        "2^16, BIT-EXACT decode pinned at zero tolerance against the "
-        "plain gradient digest — leaves only arithmetic-coded and "
-        "hierarchical JPEG at the libjpeg seam",
-        ops=("EXT-multimodal",),
-    )
-)
-_register(
-    QuerySpec(
-        name="media_decode_audio",
-        fn=llmdata.q_media_decode_audio,
-        oracle=llmdata.Q_MEDIA_DECODE_AUDIO_SQL,
-        description="Compressed-audio decode audit (round-10): G.711 "
-        "mu-law/A-law (involution-exact companding) and IMA ADPCM WAVs "
-        "expanded via the in-repo RIFF format-tag dispatch; int16 "
-        "digests pinned by a 384-class (tone x codec) precompute plus a "
-        "closed-form mean-abs-err signal check; unknown format tags "
-        "dead-letter at the ffmpeg seam",
-        ops=("EXT-multimodal",),
-    )
-)
-_register(
-    QuerySpec(
-        name="media_decode_restart",
-        fn=llmdata.q_media_decode_restart,
-        oracle=llmdata.Q_MEDIA_DECODE_RESTART_SQL,
-        description="Progressive JPEG with restart markers (round-10): "
-        "DRI + RST0-7 resync framing over the SOF2 scan loop, per-id "
-        "intervals, per-interval DC-predictor/EOB-run reset and "
-        "byte-realign; FULL 256-class digest oracle whose precompute "
-        "encodes with each class's actual interval — closes the last "
-        "progressive profile behind the seam (remaining JPEG tail: "
-        "arithmetic/lossless/hierarchical)",
-        ops=("EXT-multimodal",),
-    )
-)
-_register(
-    QuerySpec(
-        name="video_mp4_meta",
-        fn=llmdata.q_video_mp4_meta,
-        oracle=llmdata.Q_VIDEO_MP4_META_SQL,
-        description="MP4 container survey (round-10): from-spec ISO/IEC "
-        "14496-12 box parse of each MJPEG-MP4 clip — brand, codec fourcc, "
-        "track geometry, sample count, duration — with NO frame decode "
-        "(the sample table is KBs regardless of mdat size); hostile "
-        "payloads (bogus box sizes, sample extents past EOF, crafted "
-        "2^32-sample stsz) dead-letter before any allocation; FULL "
-        "closed-form oracle",
-        ops=("EXT-multimodal",),
-    )
-)
-_register(
-    QuerySpec(
-        name="media_decode_mp4",
-        fn=llmdata.q_media_decode_mp4,
-        oracle=llmdata.Q_MEDIA_DECODE_MP4_SQL,
-        description="Sampled-frame MJPEG-in-MP4 decode audit (round-10): "
-        "every second coded sample random-accessed via the resolved "
-        "stsc/stsz/stco table (skipped samples never decoded), decoded "
-        "through the in-repo baseline-JPEG path; per-frame digests pinned "
-        "by the 256-class quantized-gradient precompute — the container "
-        "layer of the former 'MP4 tail' opened for real, with only "
-        "inter-frame codecs (H.264/HEVC) left at the ffmpeg seam",
-        ops=("EXT-multimodal",),
-    )
-)
-_register(
-    QuerySpec(
-        name="audio_dedup_clusters",
-        fn=llmdata.q_audio_dedup_clusters,
-        oracle=llmdata.Q_AUDIO_DEDUP_CLUSTERS_SQL,
-        description="Full audio-dedup pipeline (round-9): zero-crossing "
-        "fingerprint -> star+bridge edges (two-grid bucket join over "
-        "DISTINCT signatures, one star edge per duplicate-class member — "
-        "Pregel input linear in class size) -> connected components -> "
-        "canonical per cluster; FULL oracle via 128-class union-find",
-        ops=("EXT-multimodal", "EXT-dedup", "EXT-clustering"),
-    )
-)
-_register(
-    QuerySpec(
-        name="audio_features",
-        fn=llmdata.q_audio_features,
-        oracle=llmdata.Q_AUDIO_FEATURES_SQL,
-        description="Real-codec PCM WAV decode + rms/peak/zero-crossing "
-        "features over Arrow mapInPandas; BOUNDED oracle: exact header "
-        "columns recomputed from the synthesis contract, float features "
-        "err-bound-checked Spark-side against the pure-tone closed forms",
-        ops=("EXT-multimodal",),
     )
 )
 from ..operators import text as _text_ops  # noqa: E402
@@ -1978,18 +1705,15 @@ _register(
 )
 
 # ---------------------------------------------------------------------------
-# Driver snapshot ordering (round-4 judge ask #2).  The external driver's
-# CORRECTNESS gate samples the FIRST ``DRIVER_SNAPSHOT_N`` registry entries,
-# so registration order decides which queries get an external driver row.
-# Rounds 1-4 kept registration append-only and 38 queries (everything added
-# after the original 50) never received one.  The explicit order below
-# rotates the long-uncovered tail INTO the snapshot while keeping
+# Driver snapshot ordering.  The external driver's CORRECTNESS gate samples
+# the FIRST ``DRIVER_SNAPSHOT_N`` registry entries, so registration order
+# decides which queries get an external driver row.  The list below keeps
 # aggregate_orders first (entry() smoke) and the reference-parity core
-# (Q1/Q2/Q3, sources/sinks analogs) under permanent driver coverage; every
-# snapshot entry must carry an oracle so the driver can hash-check it (the
-# six rows-only queries stay in the tail, where the self-sweep still covers
-# them).  tools/driver_sim.py records the post-rotation tail as
-# ``_meta.driver_uncovered``.
+# under permanent coverage, pins the scale-critical paths, and gives the
+# rotation slots to new oracle-bearing queries first and then to the
+# queries stalest by last external row.  Every snapshot entry must carry
+# an oracle so the driver can hash-check it.  tools/driver_sim.py records
+# the tail as ``_meta.driver_uncovered``.
 # ---------------------------------------------------------------------------
 
 DRIVER_SNAPSHOT_N = 50
@@ -2006,43 +1730,21 @@ _DRIVER_SNAPSHOT = [
     "row_counts",
     "pricing_summary",
     "adhoc_sql",
-    # --- round-10 rotation, STALEST-FIRST steady-state policy (documented
-    # round 8).  The 26 rotation slots go to (a) newly-registered
-    # oracle-bearing queries (this round: dedup_clusters_star,
-    # video_dedup_clusters, media_decode_progressive, and the second-wave
-    # five — media_decode_restart, media_decode_audio, media_decode_lossless,
-    # video_mp4_meta, media_decode_mp4), then (b) queries whose IMPLEMENTATION changed
-    # since their last external row (video_neardup + image_neardup +
-    # audio_neardup: rewritten over distinct-signature pre-grouping;
-    # media_decode + media_decode_subsampled: the shared decode tail was
-    # refactored for the progressive path and grew the fancy-upsampling
-    # dial — their oracles pin the default-path digests), then (c) the
-    # stalest by last-external-hash-matched round over the
-    # CORRECTNESS_r01..r09 union — the first 13 of the 24-entry r05
-    # cohort (fk_integrity .. temperature_mixture), ties broken by
-    # registry order; the remaining eleven r05 rows (training_shards,
-    # vocab_coverage, bpe_top_pairs, retention_cohorts,
-    # rolling_active_users, daily_anomalies, edit_distance_pairs,
-    # containment_pairs, basket_pairs, scd2_customer_segments,
-    # robust_outliers) lead the next rotation.  The 11-entry core above
-    # and the 13 scale pins below never rotate.  Rotated out (all
-    # externally covered in r09): media_decode_interlaced,
-    # audio_dedup_clusters, video_fingerprint, image_dedup_clusters,
-    # embedding_quantize, lang_id .. multi_grain_rollup.
-    # ---------------------------------------------------------------------
+    # --- rotation slots (26): new oracle-bearing queries, then stalest
+    # first by last external row, ties broken by registry order.
     "dedup_clusters_star",
-    "video_dedup_clusters",
-    "media_decode_progressive",
-    "media_decode_restart",
-    "media_decode_audio",
-    "media_decode_lossless",
-    "video_mp4_meta",
-    "media_decode_mp4",
-    "video_neardup",
-    "image_neardup",
-    "audio_neardup",
-    "media_decode",
-    "media_decode_subsampled",
+    "training_shards",
+    "vocab_coverage",
+    "bpe_top_pairs",
+    "retention_cohorts",
+    "rolling_active_users",
+    "daily_anomalies",
+    "edit_distance_pairs",
+    "containment_pairs",
+    "basket_pairs",
+    "scd2_customer_segments",
+    "robust_outliers",
+    "top_parts_by_revenue",
     "fk_integrity",
     "repetition_signals",
     "pii_scrub",
@@ -2089,13 +1791,6 @@ _register(
         ops=("EXT-sampling", "EXT-delivery"),
     )
 )
-
-
-# Rotation status: the never-driver-covered set has been EMPTY since r07.
-# Steady state (round-8 policy, documented at the snapshot list): new
-# oracle-bearing queries enter the rotation immediately; the remaining
-# rotation slots go stalest-first by last-external-row age from the
-# CORRECTNESS_r*.json history; core and pins never rotate.
 
 
 def _apply_driver_order() -> None:

@@ -48,7 +48,6 @@ SLOW_TESTS = frozenset({
     "test_llmdata_ops.py::test_ann_reports_green_and_not_tautological",
     "test_round8_ops.py::test_ann_report_self_describes_sampling",
     "test_plan_quality.py::test_scan_counts_stay_minimized",
-    "test_plan_quality.py::test_media_family_band_join_shape",
     "test_bounded_oracle_audits.py::test_semantic_dup_rule_not_vacuous",
     "test_oracle_parity.py::test_query_matches_oracle[dedup_method_agreement]",
     "test_oracle_parity.py::test_oracle_query_output_is_driver_sortable[embedding_ann_lsh]",
@@ -91,8 +90,6 @@ SLOW_TESTS = frozenset({
     "test_bounded_oracle_audits.py::test_packed_sequences_matches_bounded_oracle",
     "test_oracle_parity.py::test_oracle_query_output_is_driver_sortable[doc_pagerank]",
     "test_plan_quality.py::test_round3_ops_stay_jvm_side_and_broadcast",
-    "test_round10_ops.py::test_video_star_edges_components_match_clique_graph",
-    "test_oracle_parity.py::test_query_matches_oracle[image_dedup_clusters]",
     "test_streaming_multimodal.py::test_dedup_ingest_crash_between_doc_write_and_index_swap",
     "test_cli.py::test_cli_reproduces_reference_day",
     "test_sampling.py::test_dsir_ranks_targetlike_docs_above_dissimilar",
@@ -106,7 +103,6 @@ SLOW_TESTS = frozenset({
     "test_bounded_oracle_audits.py::test_semantic_dedup_matches_bounded_oracle",
     "test_oracle_parity.py::test_query_matches_oracle[bigram_lm_score]",
     "test_oracle_parity.py::test_query_matches_oracle[semantic_dedup]",
-    "test_oracle_parity.py::test_oracle_query_output_is_driver_sortable[image_dedup_clusters]",
     "test_oracle_parity.py::test_query_matches_oracle[corpus_curation]",
     "test_llmdata_ops.py::test_minhash_pairs_meet_threshold",
     "test_llmdata_ops.py::test_random_projection_preserves_geometry",

@@ -20,11 +20,9 @@ def test_query_matches_oracle(spark, duck, name):
 
 
 def test_no_rows_only_queries_remain():
-    """Round 7 closed the last two rows-only entries (media_resize /
-    audio_features gained closed-form oracles): every registry query is now
-    hash-checkable.  This pins the invariant so a future query can't
-    silently register without an oracle (a deliberate rows-only addition
-    should update this test with its justification)."""
+    """Every registry query is hash-checkable.  This pins the invariant so
+    a future query can't silently register without an oracle (a deliberate
+    rows-only addition should update this test with its justification)."""
     assert ROWS_ONLY_QUERIES == []
 
 

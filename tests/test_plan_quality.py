@@ -66,8 +66,7 @@ def test_events_scan_prunes_columns(spark):
 
 def test_extension_ops_stay_jvm_side(spark):
     """Dedup/text/similarity operators are built from builtins only — no
-    Python UDF may appear in their plans (multimodal mapInPandas is the
-    single sanctioned Arrow boundary and is not in this set)."""
+    Python UDF may appear in their plans, so they stay in codegen."""
     for name in ("dedup_fingerprint", "dedup_minhash_lsh", "simhash_fingerprints",
                  "lang_id", "text_quality", "token_counts", "doc_fingerprints",
                  "tf_idf", "train_test_split", "embedding_topk"):
@@ -480,72 +479,3 @@ def test_rank_filter_samplers_keep_window_group_limit(spark):
         assert stats["python_udfs"] == 0
 
 
-def test_media_family_band_join_shape(spark):
-    """Round-9 judge ask #3: pin the banded-join shape of the media dedup
-    family.  A refactor that degenerates the band join into a cross
-    product would stay oracle-green at sf0.01 (tiny candidate sets) while
-    destroying the 100-TB contract — so assert the join is an EQUI-join
-    (hash or sort-merge, never CartesianProduct / BroadcastNestedLoopJoin)
-    and the only shuffles are the band join + candidate distinct.  The
-    decode stage is lineage-truncated (localCheckpoint), so these plans
-    are pure JVM column math: zero row-at-a-time Python."""
-    for name in (
-        "image_neardup",
-        "audio_neardup",
-        "video_neardup",
-        "image_dedup_clusters",
-        "audio_dedup_clusters",
-        "video_dedup_clusters",
-    ):
-        stats = plan_stats(REGISTRY[name].fn(spark, SF_DIR))
-        plan = stats["plan"]
-        assert "CartesianProduct" not in plan, f"{name}: banding degenerated"
-        assert "BroadcastNestedLoopJoin" not in plan, (
-            f"{name}: band join is not an equi-join"
-        )
-        equi = (
-            stats["broadcast_hash_joins"]
-            + stats["sort_merge_joins"]
-            + plan.count(") ShuffledHashJoin")
-        )
-        assert equi >= 1, f"{name}: no equi-join in plan"
-        assert stats["python_udfs"] == 0, f"{name}: row-at-a-time Python"
-        if name.endswith("neardup"):
-            # round-10 pre-grouped shape (all three modalities): band
-            # join + distinct over DISTINCT signatures, plus the
-            # member-expansion equi-joins (confirmed sig pairs x members
-            # x2, intra-class self-join) — all keyed on rep/signature,
-            # bounded by near-dup volume
-            assert stats["shuffles"] <= 8, (
-                f"{name}: {stats['shuffles']} shuffles (pre-grouped band "
-                "join + expansion is the contract)"
-            )
-
-
-def test_media_decode_plan_is_joinless_arrow(spark):
-    """media_decode / media_decode_subsampled are pure Arrow mapInPandas
-    pipelines over executor-born payloads: no join of any kind, no
-    row-at-a-time Python, and exactly the one repartition exchange that
-    spreads the CPU-dense codec work."""
-    for name in (
-        "media_decode",
-        "media_decode_subsampled",
-        "media_decode_interlaced",
-        "media_decode_progressive",
-        "media_decode_restart",
-        "media_decode_lossless",
-        "media_decode_mp4",
-        "media_decode_audio",
-        "video_mp4_meta",
-    ):
-        stats = plan_stats(REGISTRY[name].fn(spark, SF_DIR))
-        plan = stats["plan"]
-        for node in (
-            "CartesianProduct",
-            "BroadcastNestedLoopJoin",
-            "SortMergeJoin",
-            "BroadcastHashJoin",
-        ):
-            assert node not in plan, f"{name}: unexpected {node}"
-        assert stats["python_udfs"] == 0
-        assert "MapInPandas" in plan, f"{name}: lost the Arrow batch stage"
