@@ -12,7 +12,7 @@ Cassandra procurement ETL stack), re-expressed Spark-first:
 
 Beyond reference parity, the engine adds large-scale training-data-pipeline
 operators: dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding
-cosine), similarity search and text analysis.
+cosine), similarity search, text analysis, and multimodal column plumbing.
 
 All semantics derive from the public reference at /root/reference (cited
 file:line in docstrings) and the public Apache Spark API.

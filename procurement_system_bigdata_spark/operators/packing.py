@@ -31,9 +31,9 @@ from pyspark.sql.types import (
 )
 
 # The external driver imports this package via a bare sys.path insert that
-# executor Python workers never see: pack's closure references module-level
-# greedy_boundaries, so this module must travel by value inside the pickled
-# closure.
+# executor Python workers never see (same contract as operators/codecs in
+# multimodal.py): pack's closure references module-level greedy_boundaries,
+# so this module must travel by value inside the pickled closure.
 import sys as _sys
 
 from pyspark.cloudpickle import register_pickle_by_value

@@ -152,3 +152,29 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     built into the Spark distribution."""
     return spark.read.orc(path)
 
+
+def read_media_dir(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
+    """Raw media ingest via Spark's ``binaryFile`` source: one row per file
+    with (path, modificationTime, length, content) — the standard entry
+    point for image/audio/video corpora, feeding operators/multimodal
+    (content is the opaque binary column the codecs decode executor-side).
+
+    Scale notes: the source parallelizes by file and honors
+    ``pathGlobFilter``; partition sizing follows
+    spark.sql.files.maxPartitionBytes, so millions of small media files
+    want a compaction pass (or a manifest + binary payload table) rather
+    than per-file rows — same operational fix as compact_parquet."""
+    reader = spark.read.format("binaryFile")
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
+    return reader.load(path)
+
+
+def compact_media_dir(spark: SparkSession, path: str, out: str, glob: str | None = None) -> int:
+    """The many-small-media-files fix read_media_dir's docstring warns
+    about: ingest a directory of raw media files ONCE into a parquet
+    payload table (path, length, content) that scans at block granularity
+    afterwards.  Returns the row count."""
+    df = read_media_dir(spark, path, glob).select("path", "length", "content")
+    df.write.mode("overwrite").parquet(out)
+    return spark.read.parquet(out).count()

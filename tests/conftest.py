@@ -90,6 +90,7 @@ SLOW_TESTS = frozenset({
     "test_bounded_oracle_audits.py::test_packed_sequences_matches_bounded_oracle",
     "test_oracle_parity.py::test_oracle_query_output_is_driver_sortable[doc_pagerank]",
     "test_plan_quality.py::test_round3_ops_stay_jvm_side_and_broadcast",
+    "test_round10_ops.py::test_video_star_edges_components_match_clique_graph",
     "test_streaming_multimodal.py::test_dedup_ingest_crash_between_doc_write_and_index_swap",
     "test_cli.py::test_cli_reproduces_reference_day",
     "test_sampling.py::test_dsir_ranks_targetlike_docs_above_dissimilar",

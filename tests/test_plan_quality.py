@@ -66,7 +66,8 @@ def test_events_scan_prunes_columns(spark):
 
 def test_extension_ops_stay_jvm_side(spark):
     """Dedup/text/similarity operators are built from builtins only — no
-    Python UDF may appear in their plans, so they stay in codegen."""
+    Python UDF may appear in their plans (multimodal mapInPandas is the
+    single sanctioned Arrow boundary and is not in this set)."""
     for name in ("dedup_fingerprint", "dedup_minhash_lsh", "simhash_fingerprints",
                  "lang_id", "text_quality", "token_counts", "doc_fingerprints",
                  "tf_idf", "train_test_split", "embedding_topk"):

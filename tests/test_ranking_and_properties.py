@@ -255,6 +255,46 @@ def test_pii_scrub_is_idempotent_and_entropy_bounded(spark, texts):
             assert h <= math.log2(distinct) + 1e-6
 
 
+@given(
+    mid=st.integers(min_value=0, max_value=10**9),
+    w=st.integers(min_value=1, max_value=40),
+    h=st.integers(min_value=1, max_value=40),
+    out_w=st.integers(min_value=1, max_value=40),
+    out_h=st.integers(min_value=1, max_value=40),
+)
+@settings(max_examples=50, deadline=None)
+def test_codec_roundtrip_and_resize_properties(mid, w, h, out_w, out_h):
+    """PPM encode/decode is an exact roundtrip for any dims; nearest resize
+    hits the requested shape and only ever emits source pixels."""
+    import numpy as np
+
+    from procurement_system_bigdata_spark.operators import codecs
+
+    arr = codecs.decode_ppm(codecs.synthesize_image(mid, w, h))
+    assert arr.shape == (h, w, 3)
+    assert (codecs.decode_ppm(codecs.encode_ppm(arr)) == arr).all()
+    resized = codecs.resize_nearest(arr, out_w, out_h)
+    assert resized.shape == (out_h, out_w, 3)
+    src_px = {tuple(p) for p in arr.reshape(-1, 3)}
+    assert {tuple(p) for p in resized.reshape(-1, 3)} <= src_px
+
+
+@given(rate=st.sampled_from([4000, 8000, 16000]), n=st.integers(1, 4000))
+@settings(max_examples=25, deadline=None)
+def test_wav_roundtrip_tolerance(rate, n):
+    """16-bit PCM WAV roundtrip distorts by at most one quantization step."""
+    import numpy as np
+
+    from procurement_system_bigdata_spark.operators import codecs
+
+    x = 0.8 * np.sin(np.arange(n) * 0.37)
+    y, r = codecs.decode_wav(codecs.encode_wav(x, rate))
+    assert r == rate and len(y) == n
+    # error budget: half-step rounding plus the 32767-encode / 32768-decode
+    # scale asymmetry (|x| <= 1) -> under two quantization steps total
+    assert float(np.max(np.abs(x - y))) <= 2.0 / 32768.0
+
+
 def test_running_total_two_phase_equals_window(spark):
     """The two-phase prefix sum must equal the single-partition running
     window exactly, on exact integer values, at every row."""

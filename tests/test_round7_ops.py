@@ -314,6 +314,47 @@ def test_perplexity_approx_dial_has_no_per_source_sort(spark, sf_docs):
     assert "Window" in exact_plan  # the dial actually changes the plan
 
 
+# --- multimodal bounded oracles (VERDICT r06 ask #5) ------------------------
+
+
+def test_audio_audit_green_on_contract_corpus(spark):
+    """Every boolean TRUE + exact header columns on the real synthetic
+    corpus — the Spark side of the new driver oracle."""
+    from procurement_system_bigdata_spark.operators import multimodal
+
+    docs = spark.range(0, 40).select(F.col("id").alias("doc_id"))
+    media = multimodal.attach_synthetic_media(docs)
+    rows = multimodal.audio_features_audit(media).collect()
+    assert len(rows) == 20  # every_n_audio=2
+    for r in rows:
+        assert r.sample_rate == 8000 and r.n_samples == 1600
+        assert r.duration_ms == 200
+        assert r.rms_ok and r.peak_ok and r.zc_ok
+
+
+def test_audio_audit_flips_on_defective_payload(spark):
+    """The audit is not vacuous: a payload violating the tone contract
+    (wrong amplitude / wrong frequency) flips the matching boolean."""
+    import numpy as np
+
+    from procurement_system_bigdata_spark.operators import codecs, multimodal
+
+    t = np.arange(1600) / 8000.0
+    quiet = codecs.encode_wav(0.1 * np.sin(2 * np.pi * 100.0 * t), 8000)  # amp off
+    fast = codecs.encode_wav(
+        0.5 * np.sin(2 * np.pi * 2000.0 * t), 8000
+    )  # freq off the media_id contract
+    good = codecs.synthesize_wav(0)
+    media = spark.createDataFrame(
+        [(0, bytearray(good)), (2, bytearray(quiet)), (4, bytearray(fast))],
+        "media_id long, content binary",
+    )
+    rows = {r.media_id: r for r in multimodal.audio_features_audit(media).collect()}
+    assert rows[0].rms_ok and rows[0].peak_ok and rows[0].zc_ok
+    assert not rows[2].rms_ok and not rows[2].peak_ok
+    assert not rows[4].zc_ok
+
+
 # --- samplable ANN audit (VERDICT r06 ask #7) --------------------------------
 
 

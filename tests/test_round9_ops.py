@@ -1,5 +1,5 @@
 """Round-9 tests: codec hardening (advisor findings), 4:2:0 JPEG decode,
-star-edge dedup clusters, and the media-family plan pins.
+and star-edge dedup clusters.
 
 Advisor findings closed here:
 - zlib.error escaped _corrupt_guard: PNG chunk CRCs are over raw chunk
@@ -17,7 +17,7 @@ import zlib
 import numpy as np
 import pytest
 
-from conftest import SF_DIR, assert_matches_oracle
+from conftest import SF_DIR
 
 from pyspark.sql import functions as F
 
@@ -144,8 +144,8 @@ def test_jpeg_subsampled_roundtrip_error_bounds():
 
 def test_jpeg_444_bitstream_unchanged_by_subsampling_support():
     """The generalized encoder must emit byte-identical 4:4:4 streams
-    (the media_decode oracle pins decoded digests; the encoder default
-    must not drift)."""
+    (decoded digests of baseline streams are pinned elsewhere; the encoder
+    default must not drift)."""
     arr = codecs.decode_ppm(codecs.synthesize_image(42, 32, 24))
     payload = codecs.encode_jpeg(arr, 90)
     # SOF0 component specs: id 1 Y 1x1 q0, ids 2-3 chroma 1x1 q1
@@ -188,26 +188,6 @@ def test_jpeg_subsampled_fuzz_never_crashes():
         buf[i] = rng.randrange(256)
         try_decode(bytes(buf))
         buf[i] = old
-
-
-def test_media_decode_subsampled_oracle_green(spark, duck):
-    from procurement_system_bigdata_spark.queries import llmdata
-
-    assert_matches_oracle(
-        llmdata.q_media_decode_subsampled(spark, SF_DIR),
-        duck,
-        llmdata.Q_MEDIA_DECODE_SUBSAMPLED_SQL,
-    )
-
-
-def test_media_decode_subsampled_covers_both_profiles(spark):
-    from procurement_system_bigdata_spark.queries import llmdata
-
-    rows = llmdata.q_media_decode_subsampled(spark, SF_DIR).collect()
-    assert len(rows) > 0
-    assert all(r.err_ok for r in rows)
-    digests = {r.media_id % 2: r.pixel_md5 for r in rows}
-    assert len(digests) == 2  # both 4:2:0 and 4:2:2 rows present
 
 
 # --- star-edge dedup clusters (round-9 judge ask #1) --------------------------
@@ -265,28 +245,6 @@ def test_audio_star_edges_linear_in_duplicate_class(spark):
     media = multimodal.attach_fp_tones(docs).localCheckpoint()
     assert multimodal.audio_dedup_edges(media).count() == n - 1
     assert multimodal.audio_neardup_pairs(media).count() == n * (n - 1) // 2
-
-
-def test_image_dedup_clusters_star_oracle_green(spark, duck):
-    """q_image_dedup_clusters now rides the star-edge generator; the
-    union-find oracle must stay green (bit-identical output contract)."""
-    from procurement_system_bigdata_spark.queries import llmdata
-
-    assert_matches_oracle(
-        llmdata.q_image_dedup_clusters(spark, SF_DIR),
-        duck,
-        llmdata.Q_IMAGE_DEDUP_CLUSTERS_SQL,
-    )
-
-
-def test_audio_dedup_clusters_oracle_green(spark, duck):
-    from procurement_system_bigdata_spark.queries import llmdata
-
-    assert_matches_oracle(
-        llmdata.q_audio_dedup_clusters(spark, SF_DIR),
-        duck,
-        llmdata.Q_AUDIO_DEDUP_CLUSTERS_SQL,
-    )
 
 
 # --- banding recall second dial (round-9 judge ask #7) -------------------------
@@ -382,16 +340,6 @@ def test_png_adam7_fuzz_never_crashes():
         buf[i] = old
 
 
-def test_media_decode_interlaced_oracle_green(spark, duck):
-    from procurement_system_bigdata_spark.queries import llmdata
-
-    assert_matches_oracle(
-        llmdata.q_media_decode_interlaced(spark, SF_DIR),
-        duck,
-        llmdata.Q_MEDIA_DECODE_INTERLACED_SQL,
-    )
-
-
 # --- video dedup family (round-9 second wave) ----------------------------------
 
 
@@ -432,26 +380,6 @@ def test_video_neardup_position_sensitive():
     assert len(shared) >= 3  # content overlap is real...
     mh = max(ham(sigs[0][p], sigs[32][p]) for p in range(4))
     assert mh > multimodal.VIDEO_MAX_HAMMING  # ...but positions differ
-
-
-def test_video_fingerprint_oracle_green(spark, duck):
-    from procurement_system_bigdata_spark.queries import llmdata
-
-    assert_matches_oracle(
-        llmdata.q_video_fingerprint(spark, SF_DIR),
-        duck,
-        llmdata.Q_VIDEO_FINGERPRINT_SQL,
-    )
-
-
-def test_video_neardup_oracle_green(spark, duck):
-    from procurement_system_bigdata_spark.queries import llmdata
-
-    assert_matches_oracle(
-        llmdata.q_video_neardup(spark, SF_DIR),
-        duck,
-        llmdata.Q_VIDEO_NEARDUP_SQL,
-    )
 
 
 def test_video_short_clip_dead_letters(spark):

@@ -413,6 +413,35 @@ def test_orc_roundtrip_with_pushdown(spark, tmp_path):
     assert pruned.count() == 250
 
 
+def test_binaryfile_media_ingest_feeds_codecs(spark, tmp_path):
+    """binaryFile source -> multimodal pipeline: files on disk become
+    (path, content) rows, the glob filters by extension, and the bytes
+    decode executor-side to the exact pixels that were written."""
+    import numpy as np
+
+    from procurement_system_bigdata_spark.operators import codecs
+    from procurement_system_bigdata_spark.sources import readers
+
+    media_dir = tmp_path / "media"
+    media_dir.mkdir()
+    want = {}
+    for i in range(4):
+        payload = codecs.synthesize_image(i, 8, 6)
+        (media_dir / f"img_{i}.ppm").write_bytes(payload)
+        want[f"img_{i}.ppm"] = payload
+    (media_dir / "notes.txt").write_bytes(b"not media")
+
+    rows = readers.read_media_dir(spark, str(media_dir), glob="*.ppm").collect()
+    assert len(rows) == 4
+    for r in rows:
+        name = r.path.rsplit("/", 1)[-1]
+        assert r.length == len(want[name])
+        assert bytes(r.content) == want[name]
+        arr = codecs.decode_ppm(bytes(r.content))
+        assert arr.shape == (6, 8, 3)
+        assert (arr == codecs.decode_ppm(want[name])).all()
+
+
 def test_lww_store_abort_discards_staged_files(spark, tmp_path):
     """The DSv2 abort path: staged part files from a failed write must be
     removed so no half-committed batch ever becomes visible to readers."""
@@ -478,6 +507,25 @@ def test_versioned_dataset_pin_and_vacuum(spark, tmp_path):
 
     with pytest.raises(ValueError, match="version 1 not found"):
         versioned.read_version(spark, root, 1)
+
+
+def test_media_compaction_roundtrip(spark, tmp_path):
+    """binaryFile ingest compacted to a parquet payload table: same bytes,
+    block-granular scans afterwards."""
+    from procurement_system_bigdata_spark.operators import codecs
+    from procurement_system_bigdata_spark.sources import readers
+
+    media_dir = tmp_path / "raw"
+    media_dir.mkdir()
+    for i in range(3):
+        (media_dir / f"m{i}.ppm").write_bytes(codecs.synthesize_image(i, 8, 6))
+    out = str(tmp_path / "payloads")
+    n = readers.compact_media_dir(spark, str(media_dir), out, glob="*.ppm")
+    assert n == 3
+    back = {r.path.rsplit("/", 1)[-1]: bytes(r.content)
+            for r in spark.read.parquet(out).collect()}
+    for i in range(3):
+        assert back[f"m{i}.ppm"] == codecs.synthesize_image(i, 8, 6)
 
 
 def test_nightly_curation_writes_pinned_versions(spark, tmp_path):

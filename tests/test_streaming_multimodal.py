@@ -1,4 +1,4 @@
-"""Streaming batch-equivalence tests: stream results equal their batch twins."""
+"""Streaming batch-equivalence and multimodal plumbing tests."""
 
 from __future__ import annotations
 
@@ -9,6 +9,7 @@ import pytest
 from conftest import SF_DIR
 
 from procurement_system_bigdata_spark.catalog import load_table
+from procurement_system_bigdata_spark.operators import multimodal
 from procurement_system_bigdata_spark.streaming import events as se
 
 
@@ -128,6 +129,143 @@ def test_stateful_spend_totals_equal_batch(spark, events_parquet_dir):
     assert got == want
 
 
+def test_multimodal_feature_extraction(spark):
+    docs = load_table(spark, SF_DIR, "documents")
+    media = multimodal.attach_binary_payloads(docs)
+    feats = multimodal.extract_features(media, bucket_partitions=4)
+    rows = feats.collect()
+    assert len(rows) == docs.count()
+    by_id = {r.media_id: r for r in rows}
+    # deterministic: sha of the utf-8 text bytes, head bytes of the text
+    import hashlib
+
+    sample = docs.limit(5).collect()
+    for r in sample:
+        got = by_id[r.doc_id]
+        raw = r.text.encode()
+        assert got.sha256_8 == hashlib.sha256(raw).hexdigest()[:8]
+        assert got.head_hex == raw[:4].hex()
+        assert got.n_bytes == len(raw)
+        assert 0 < got.byte_entropy_q <= 256
+
+
+def test_compressed_tail_stays_gated():
+    """Round-8: PNG and baseline JPEG decode for real now, so the explicit
+    PIL/ffmpeg gate moves to the remaining tail — truncated payloads,
+    progressive JPEG (SOF2), interlaced PNG — which must still raise
+    UnsupportedMediaError, not crash."""
+    import struct
+    import zlib
+
+    from procurement_system_bigdata_spark.operators import codecs
+    from procurement_system_bigdata_spark.operators.codecs import UnsupportedMediaError
+
+    # truncated payloads of both formats
+    with pytest.raises(UnsupportedMediaError):
+        multimodal.decode_image(b"\x89PNG\r\n\x1a\n....")
+    with pytest.raises(UnsupportedMediaError):
+        multimodal.decode_image(b"\xff\xd8\xff\xe0....")
+    # progressive JPEG: flip our encoder's SOF0 marker to SOF2
+    import numpy as np
+
+    jp = bytearray(codecs.encode_jpeg(np.zeros((8, 8, 3), dtype=np.uint8)))
+    sof = bytes(jp).find(b"\xff\xc0")
+    jp[sof + 1] = 0xC2
+    with pytest.raises(UnsupportedMediaError, match="progressive"):
+        codecs.decode_jpeg(bytes(jp))
+    # interlaced PNG (Adam7 flag set, CRC recomputed)
+    ihdr = struct.pack(">IIBBBBB", 8, 8, 8, 2, 0, 0, 1)
+    png = (
+        b"\x89PNG\r\n\x1a\n"
+        + struct.pack(">I", len(ihdr))
+        + b"IHDR"
+        + ihdr
+        + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr) & 0xFFFFFFFF)
+    )
+    with pytest.raises(UnsupportedMediaError):
+        codecs.decode_png(png + b"\x00" * 32)
+
+
+def test_ppm_and_bmp_roundtrip_decode():
+    """The numpy codecs must decode real pixels: PPM roundtrip is exact, and
+    a hand-assembled bottom-up BGR BMP decodes to the expected RGB."""
+    import struct
+
+    import numpy as np
+
+    from procurement_system_bigdata_spark.operators import codecs
+
+    arr = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
+    assert (codecs.decode_ppm(codecs.encode_ppm(arr)) == arr).all()
+
+    # 2x2 24-bit BMP: rows bottom-up, BGR, padded to 4 bytes (2*3=6 -> 8)
+    px = {  # (x, y) -> RGB
+        (0, 0): (255, 0, 0), (1, 0): (0, 255, 0),
+        (0, 1): (0, 0, 255), (1, 1): (10, 20, 30),
+    }
+    def row(y):
+        out = b""
+        for x in range(2):
+            r, g, b = px[(x, y)]
+            out += bytes([b, g, r])
+        return out + b"\0\0"
+    pixel_data = row(1) + row(0)  # bottom-up
+    header = b"BM" + struct.pack("<IHHI", 54 + len(pixel_data), 0, 0, 54)
+    info = struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 0, len(pixel_data), 0, 0, 0, 0)
+    decoded = codecs.decode_bmp(header + info + pixel_data)
+    for (x, y), rgb in px.items():
+        assert tuple(decoded[y, x]) == rgb
+
+
+def test_wav_decode_features():
+    import numpy as np
+
+    from procurement_system_bigdata_spark.operators import codecs
+
+    rate = 8000
+    tone = 0.5 * np.sin(2 * np.pi * 200.0 * np.arange(1600) / rate)
+    x, r = codecs.decode_wav(codecs.encode_wav(tone, rate))
+    assert r == rate and len(x) == 1600
+    assert abs(float(np.sqrt(np.mean(x**2))) - 0.5 / np.sqrt(2)) < 1e-3
+
+
+def test_real_image_resize_stage(spark):
+    """End-to-end through Spark: synthetic PPM payloads decode on executors,
+    nearest-neighbor resize produces exact expected pixels, audio rows are
+    dropped (dead-letter pattern)."""
+    import numpy as np
+
+    from procurement_system_bigdata_spark.operators import codecs
+
+    docs = spark.range(20).selectExpr("id AS doc_id", "'x' AS text")
+    media = multimodal.attach_synthetic_media(docs)
+    resized = multimodal.resize_images(media, width=8, height=8).collect()
+    # every_n_audio=2 -> odd ids are images
+    assert {r.media_id for r in resized} == {i for i in range(20) if i % 2 == 1}
+    for r in resized:
+        got = codecs.decode_ppm(r.content)
+        expected = codecs.resize_nearest(
+            codecs.decode_ppm(multimodal.synthesize_image(r.media_id)), 8, 8
+        )
+        assert got.shape == (8, 8, 3) and (got == expected).all()
+
+
+def test_real_audio_features_stage(spark):
+    docs = spark.range(20).selectExpr("id AS doc_id", "'x' AS text")
+    media = multimodal.attach_synthetic_media(docs)
+    feats = multimodal.audio_features(media).collect()
+    assert {r.media_id for r in feats} == {i for i in range(20) if i % 2 == 0}
+    for r in feats:
+        assert r.sample_rate == 8000 and r.n_samples == 1600
+        assert abs(r.duration_sec - 0.2) < 1e-9
+        # pure tone at amplitude 0.5: rms ~ 0.5/sqrt(2), peak ~ 0.5
+        assert abs(r.rms - 0.3535) < 0.01
+        assert 0.49 <= r.peak <= 0.5
+        # zero crossings ~ 2 * freq * duration, freq = 100 + (id%32)*25
+        freq = 100.0 + (r.media_id % 32) * 25.0
+        assert abs(r.zero_crossings - 2 * freq * 0.2) <= 2
+
+
 def test_stream_foreachbatch_upsert_equals_batch(spark, events_parquet_dir):
     """The foreachBatch MERGE sink, fed the events in multiple micro-batches,
     must converge to exactly the batch snapshot_upsert relation."""
@@ -236,6 +374,46 @@ def test_upsert_checkpoint_reset_sweeps_two_generations_of_orphans(
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_multimodal_resize_is_one_to_one(spark):
+    docs = load_table(spark, SF_DIR, "documents").limit(50)
+    media = multimodal.attach_binary_payloads(docs)
+    resized = multimodal.resize_media(media, width=16, height=8)
+    rows = resized.collect()
+    assert len(rows) == 50
+    assert all(r["n_bytes"] == 16 * 8 and len(r["content"]) == 128 for r in rows)
+    assert all(r["width"] == 16 and r["height"] == 8 for r in rows)
+
+
+def test_multimodal_frame_sampling_explodes_rows(spark):
+    docs = load_table(spark, SF_DIR, "documents").limit(20)
+    media = multimodal.attach_binary_payloads(docs)
+    frames = multimodal.sample_frames(media, frame_bytes=64, every_n=2, max_frames=5)
+    rows = frames.collect()
+    n_media = {r["media_id"] for r in rows}
+    assert len(n_media) == 20 and len(rows) >= 20
+    per = {}
+    for r in rows:
+        per.setdefault(r["media_id"], []).append(r)
+        assert r["frame_idx"] % 2 == 0
+        assert 0 < r["n_bytes"] <= 64
+    assert all(len(v) <= 5 for v in per.values())
+    # deterministic: rerun yields identical (media_id, frame_idx, frame) sets
+    again = {(r["media_id"], r["frame_idx"], bytes(r["frame"])) for r in frames.collect()}
+    assert again == {(r["media_id"], r["frame_idx"], bytes(r["frame"])) for r in rows}
+
+
+def test_multimodal_empty_payload_yields_no_frames(spark):
+    import pyspark.sql.functions as F
+
+    empty = spark.createDataFrame(
+        [(1, b""), (2, b"x" * 100)], "media_id long, content binary"
+    ).withColumn("media_type", F.lit("video/mp4")).withColumn(
+        "n_bytes", F.length("content").cast("long")
+    )
+    rows = multimodal.sample_frames(empty, frame_bytes=64).collect()
+    assert {r["media_id"] for r in rows} == {2}, "empty payload must emit zero frames"
+
+
 def test_stream_static_enrichment_equals_batch(spark, events_parquet_dir):
     import pyspark.sql.functions as F
 
@@ -302,6 +480,72 @@ def test_stream_stream_interval_join_equals_batch(spark, events_parquet_dir):
         ).collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_real_video_frame_sampling(spark):
+    """RAWV clips decode on executors: sampled frame indices follow the
+    every_n/max_frames contract and each emitted frame's pixels equal the
+    synthesized source frame exactly; non-video payloads are dropped."""
+    import numpy as np
+    import pyspark.sql.functions as F
+
+    from procurement_system_bigdata_spark.operators import codecs
+
+    rows = [
+        (1, codecs.synthesize_video(1, 8, 6, 12), "video/x-rawv"),
+        (2, codecs.synthesize_video(2, 8, 6, 3), "video/x-rawv"),
+        (3, codecs.synthesize_image(3), "image/x-portable-pixmap"),  # dropped
+    ]
+    media = spark.createDataFrame(
+        [(mid, c, t, len(c)) for mid, c, t in rows],
+        "media_id long, content binary, media_type string, n_bytes long",
+    )
+    out = multimodal.sample_video_frames(media, every_n=4, max_frames=8).collect()
+    got = {(r.media_id, r.frame_idx) for r in out}
+    assert got == {(1, 0), (1, 4), (1, 8), (2, 0)}
+    by_key = {(r.media_id, r.frame_idx): r.frame for r in out}
+    for (mid, fi), frame in by_key.items():
+        src = codecs.rawv_frame(dict((m, c) for m, c, _ in rows)[mid], fi)
+        assert (codecs.decode_ppm(frame) == src).all()
+    # brightness shift makes frames distinct: frame 4 != frame 0
+    assert by_key[(1, 0)] != by_key[(1, 4)]
+
+
+def test_rawv_frame_index_error_not_classified_corrupt():
+    """Out-of-range frame index is a CALLER bug and must surface as
+    IndexError, not get swallowed by the corrupt guard and dead-lettered as
+    an undecodable row; actual corruption still maps to the one type."""
+    from procurement_system_bigdata_spark.operators import codecs
+
+    clip = codecs.synthesize_video(1, 8, 6, 3)
+    with pytest.raises(IndexError):
+        codecs.rawv_frame(clip, 3)
+    with pytest.raises(IndexError):
+        codecs.rawv_frame(clip, -1)
+    with pytest.raises(codecs.UnsupportedMediaError):
+        codecs.rawv_frame(b"RAWV\x01\x02\x03", 0)  # truncated header
+
+
+def test_corrupt_payloads_are_dead_lettered(spark):
+    """A truncated payload of a SUPPORTED format must be dropped like an
+    unsupported one — one corrupt file must never fail the Spark stage."""
+    from procurement_system_bigdata_spark.operators import codecs
+
+    rows = [
+        (1, codecs.synthesize_image(1), "image/x-portable-pixmap"),
+        (2, b"P6\n9 9\n255\nxx", "image/x-portable-pixmap"),  # truncated
+        (3, codecs.synthesize_wav(3), "audio/wav"),
+        (4, b"RIFF1234WAVExxxx", "audio/wav"),  # truncated
+        (5, codecs.synthesize_video(5, 8, 6, 4), "video/x-rawv"),
+        (6, b"RAWV\x01\x00", "video/x-rawv"),  # truncated header
+    ]
+    media = spark.createDataFrame(
+        [(mid, c, t, len(c)) for mid, c, t in rows],
+        "media_id long, content binary, media_type string, n_bytes long",
+    )
+    assert {r.media_id for r in multimodal.resize_images(media).collect()} == {1}
+    assert {r.media_id for r in multimodal.audio_features(media).collect()} == {3}
+    assert {r.media_id for r in multimodal.sample_video_frames(media).collect()} == {5}
 
 
 def test_streaming_dedup_ingest_across_batches(spark, tmp_path):

@@ -40,6 +40,7 @@ STATIC = {
     "D3": "run_pipeline summary dict (XCom replacement) + queries pipeline_summary",
     "D4": "run_pipeline 0-default summary metrics + queries pipeline_summary",
     "W2-scale": "operators/ranking.with_global_sequence (single-partition-free variant)",
+    "EXT-multimodal": "operators/multimodal (mapInPandas feature-extract, 1:1 resize, 1:N frame-sample); real codecs: PNG incl. Adam7 (r9), JPEG baseline + 4:2:0/4:2:2 (r9) + progressive SOF2 incl. restart markers + lossless SOF3 (r10), MP4/ISO-BMFF container + MJPEG tracks (r10), WAV incl. G.711 + IMA ADPCM (r10), PPM/BMP/RAWV; gated tail: arithmetic-coded/hierarchical JPEG, inter-frame video H.264/HEVC, perceptual audio MP3/AAC (PIL/ffmpeg seam)",
     "EXT-streaming": "streaming/events (watermarked rollup == batch; stream "
     "dedup; session_window == batch; applyInPandasWithState custom stateful "
     "accumulator == batch across micro-batches; foreachBatch MERGE upsert "
